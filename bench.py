@@ -338,6 +338,7 @@ def emit_payloads(
     copies: dict[str, object],
     sf: float,
     idle: bool | None = None,
+    compiles: dict[str, int] | None = None,
 ) -> tuple[str, dict[str, object]]:
     """Build (compact-stdout-line, full-detail-dict). The compact line's
     query keys are the qNN prefixes (unique by construction — asserted),
@@ -448,6 +449,8 @@ def emit_payloads(
         "queries": dict(sorted(timings.items())),
         "copy": copies,
         "sf": sf,
+        # codegen classes compiled during each query's kept run
+        "compiles": dict(sorted((compiles or {}).items())),
         "key_map": {
             "queries": "stdout line packs timings as a dense array:"
             " queries.t[i] = timing of query number queries.q1st + i"
@@ -502,12 +505,22 @@ def main() -> None:
         )
     )
 
-    # Best-of-2 per query: the first execution of a plan pays whole-stage
-    # codegen + JIT (measured 9s vs 1.2s warm on the minhash pipeline),
-    # which made per-round comparisons mostly machine noise. The min of
-    # two runs reports the steady-state plan cost — the number that
+    # Best-of-2 per query: the first execution of a plan pays Janino
+    # compiles of its generated classes + JIT (measured 9s vs 1.2s warm
+    # on the minhash pipeline), which made per-round comparisons mostly
+    # machine noise. The second run skips the compiles only while the
+    # query's distinct classes fit Spark's codegen cache: under the
+    # default 100-entry cap a query with more classes recompiled all of
+    # them on EVERY run (get_spark sizes the cache; compiles[name] below
+    # records the count, so a query that outgrows it shows). The min of
+    # two runs then reports the steady-state plan cost — the number that
     # actually tracks plan regressions.
+    compile_count = (
+        spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+        .METRIC_COMPILATION_TIME().getCount
+    )
     timings: dict[str, float] = {}
+    compiles: dict[str, int] = {}
     for qi, (name, spec) in enumerate(sorted(REGISTRY.items())):
         if qi % 4 == 3:
             # Periodic JVM GC nudge: a long single-session sweep over a
@@ -528,28 +541,31 @@ def main() -> None:
             # UNIFORMLY and reruns worsen it, stop re-timing and let
             # the machine cool instead. Outside the timed window.
             spark.sparkContext._jvm.System.gc()
-        runs: list[float] = []
+        runs: list[tuple[float, int]] = []
         # Two runs normally; a third ONLY when the first two disagree by
         # >1.5x — that disagreement means one of them caught a JIT/GC
         # hiccup (round 6 recorded q63 at 7.9s this way; steady-state is
         # 2.3s), and a single tiebreak run bounds the extra cost to the
         # noisy queries instead of 1.5x-ing the whole bench.
         while len(runs) < 2 or (
-            len(runs) == 2 and max(runs) > 1.5 * min(runs)
+            len(runs) == 2 and max(runs)[0] > 1.5 * min(runs)[0]
         ):
+            c0 = compile_count()
             t0 = time.perf_counter()
             run_one(spec.fn(spark, sf_dir))
-            runs.append(time.perf_counter() - t0)
+            runs.append((time.perf_counter() - t0, compile_count() - c0))
             # LSH queries persist their signature tables (both self-join
             # sides read them); drop them between runs so timings stay
             # independent and storage doesn't accumulate dead cache.
             spark.catalog.clearCache()
-        timings[name] = round(min(runs), 4)
+        best, compiles[name] = min(runs)
+        timings[name] = round(best, 4)
 
     copies = copy_benchmarks(spark, sf_dir)
 
     line, detail = emit_payloads(
-        timings, copies, sf, idle=machine.get("idle_at_start")
+        timings, copies, sf, idle=machine.get("idle_at_start"),
+        compiles=compiles,
     )
     try:
         machine["loadavg_at_end"] = [round(v, 2) for v in os.getloadavg()]

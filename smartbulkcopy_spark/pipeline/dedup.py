@@ -3089,6 +3089,19 @@ STUDY_ID_STRIDE = 32  # > max family size, so member ids never collide
 _STUDY_SIZE_SPARK = "5 + (doc_id % 4) * 8"  # sequence() upper bound, inclusive
 
 
+def parity_graph(lab, g, label):
+    """(doc_id, ``label``) of graph ``g`` from one CC over parity-tagged
+    ids (graph-g node 2*id + g). Holds for ids of any sign: pmod(x, 2) is
+    the parity even of a negative x (x % 2 truncates: -5 % 2 = -1), and
+    shiftright(x, 1) is exact floor division (x DIV 2 truncates:
+    -5 DIV 2 = -2, not -3). Ids must stay within +-2^62 so that 2*id + 1
+    fits a long."""
+    return lab.where(F.expr(f"pmod(node, 2) = {g}")).select(
+        F.expr("shiftright(node, 1)").alias("doc_id"),
+        F.expr("shiftright(lbl, 1)").alias(label),
+    )
+
+
 def star_fallback_recall(spark, sf_dir):
     """One row: family-count and per-member CC-label agreement between
     the production clique/star candidate rule and the clique-only rule
@@ -3139,8 +3152,8 @@ def star_fallback_recall(spark, sf_dir):
     # latency is paid max(rounds) times instead of sum(rounds), and the
     # edge persist/count setup once. Labels transform exactly:
     # min(2*id + g) over a component = 2*min(id) + g (the parity g is
-    # constant within a component), so lbl DIV 2 recovers each side's
-    # original component minimum bit-for-bit.
+    # constant within a component), so floor(lbl / 2) recovers each
+    # side's original component minimum bit-for-bit (parity_graph).
     tagged = star_pairs.select(
         (F.col("a_id") * 2).alias("a_id"),
         (F.col("b_id") * 2).alias("b_id"),
@@ -3151,15 +3164,9 @@ def star_fallback_recall(spark, sf_dir):
         )
     )
     lab = connected_components(spark, tagged, shuffle_partitions=8)
-    sl = lab.where(F.col("node") % 2 == 0).select(
-        F.expr("node DIV 2").alias("doc_id"),
-        F.expr("lbl DIV 2").alias("sl"),
+    j = parity_graph(lab, 0, "sl").join(
+        parity_graph(lab, 1, "cl"), "doc_id", "full"
     )
-    cl = lab.where(F.col("node") % 2 == 1).select(
-        F.expr("node DIV 2").alias("doc_id"),
-        F.expr("lbl DIV 2").alias("cl"),
-    )
-    j = sl.join(cl, "doc_id", "full")
     agree = F.sum(
         F.coalesce((F.col("sl") == F.col("cl")).cast("long"), F.lit(0))
     )

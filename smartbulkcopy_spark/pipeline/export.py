@@ -85,9 +85,7 @@ def reconcile_export(
     ).count()
     if misplaced:
         raise ValueError(f"{misplaced} rows in the wrong shard")
-    return check_copy(
-        source, written.drop("shard"), table=out_dir, with_hash=True
-    )
+    return check_copy(source, written.drop("shard"), table=out_dir)
 
 
 def export_shards_jsonl(
@@ -131,5 +129,4 @@ def reconcile_jsonl_export(
         source.select("doc_id", "text", "lang", "source", "n_chars"),
         docs,
         table=out_dir,
-        with_hash=True,
     )

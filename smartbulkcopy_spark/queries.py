@@ -3654,48 +3654,48 @@ TIER1 = [
 # (rows_match & schema_match & hash_match). Absent = never driver-graded.
 # Generated by tools/ledger.py; keep in lockstep with SURVEY.md §2.12.
 LAST_GREEN = {
-    "q01_scan_project": 13,
-    "q02_logical_partition_bucket": 13,
-    "q03_range_partition_predicate": 13,
-    "q04_ordered_scan_desc": 13,
-    "q05_rowcount": 13,
-    "q06_bucket_counts": 13,
-    "q07_ident_current": 13,
-    "q08_table_size_agg": 13,
-    "q09_inner_join_agg": 13,
+    "q01_scan_project": 14,
+    "q02_logical_partition_bucket": 14,
+    "q03_range_partition_predicate": 14,
+    "q04_ordered_scan_desc": 14,
+    "q05_rowcount": 14,
+    "q06_bucket_counts": 14,
+    "q07_ident_current": 14,
+    "q08_table_size_agg": 14,
+    "q09_inner_join_agg": 14,
     "q100_gopher_rules": 13,
     "q101_hourly_cohort_retention": 13,
-    "q102_conversion_latency": 7,
-    "q103_embedding_drift": 7,
-    "q104_orc_corpus_roundtrip": 7,
-    "q105_curation_funnel": 7,
-    "q106_dedup_provenance": 7,
-    "q107_minhash_estimate_quality": 7,
-    "q108_jaccard_distribution": 7,
-    "q109_event_transitions": 7,
-    "q10_left_join_agg": 13,
-    "q110_image_ahash": 7,
-    "q111_image_near_dup": 7,
-    "q112_simhash_near_dup": 7,
-    "q113_cluster_size_histogram": 7,
-    "q114_incremental_image_dedup": 7,
-    "q115_detector_agreement": 7,
-    "q116_pii_audit": 7,
-    "q117_image_dedup_keep": 8,
-    "q118_pii_redaction": 8,
-    "q119_crossdoc_repeated_spans": 8,
-    "q11_semi_join": 13,
-    "q120_hashed_linear_quality": 8,
-    "q121_hll_distinct_tokens": 8,
-    "q122_cms_heavy_hitters": 8,
-    "q123_bloom_decontamination": 8,
-    "q124_source_dedup_rates": 8,
-    "q125_cluster_keep_best": 8,
-    "q126_hourly_hll_users": 8,
+    "q102_conversion_latency": 14,
+    "q103_embedding_drift": 14,
+    "q104_orc_corpus_roundtrip": 14,
+    "q105_curation_funnel": 14,
+    "q106_dedup_provenance": 14,
+    "q107_minhash_estimate_quality": 14,
+    "q108_jaccard_distribution": 14,
+    "q109_event_transitions": 14,
+    "q10_left_join_agg": 14,
+    "q110_image_ahash": 14,
+    "q111_image_near_dup": 14,
+    "q112_simhash_near_dup": 14,
+    "q113_cluster_size_histogram": 14,
+    "q114_incremental_image_dedup": 14,
+    "q115_detector_agreement": 14,
+    "q116_pii_audit": 14,
+    "q117_image_dedup_keep": 14,
+    "q118_pii_redaction": 14,
+    "q119_crossdoc_repeated_spans": 14,
+    "q11_semi_join": 14,
+    "q120_hashed_linear_quality": 14,
+    "q121_hll_distinct_tokens": 14,
+    "q122_cms_heavy_hitters": 14,
+    "q123_bloom_decontamination": 14,
+    "q124_source_dedup_rates": 14,
+    "q125_cluster_keep_best": 14,
+    "q126_hourly_hll_users": 14,
     "q127_kmv_source_overlap": 8,
     "q128_prefix_filter_join": 8,
     "q129_containment_join": 8,
-    "q12_except": 13,
+    "q12_except": 14,
     "q130_pps_token_sample": 8,
     "q131_vocab_growth": 8,
     "q132_cluster_separation": 8,
@@ -3706,7 +3706,7 @@ LAST_GREEN = {
     "q137_mad_length_outliers": 8,
     "q138_tokenizer_fertility": 8,
     "q139_gap_quantile_sketch": 8,
-    "q13_union_distinct": 13,
+    "q13_union_distinct": 14,
     "q140_regional_revenue_rollup": 8,
     "q141_pq_code_assignment": 8,
     "q142_encoding_anomaly_audit": 8,
@@ -3717,7 +3717,7 @@ LAST_GREEN = {
     "q147_temporal_split_audit": 9,
     "q148_stream_enrichment_rollup": 9,
     "q149_seqlen_truncation_frontier": 9,
-    "q14_topk": 13,
+    "q14_topk": 14,
     "q150_snapshot_diff_audit": 9,
     "q151_neyman_allocation": 9,
     "q152_corpus_rollup_totals": 9,
@@ -3728,7 +3728,7 @@ LAST_GREEN = {
     "q157_hourly_seasonality": 9,
     "q158_repeat_purchase_profile": 9,
     "q159_attribution_model_compare": 9,
-    "q15_case_when": 13,
+    "q15_case_when": 14,
     "q160_skeleton_template_dupes": 9,
     "q161_copurchase_lift": 9,
     "q162_rfm_segments": 9,
@@ -3739,7 +3739,7 @@ LAST_GREEN = {
     "q167_discount_elasticity": 9,
     "q168_scd2_version_profile": 9,
     "q169_zipf_coverage": 9,
-    "q16_quotename": 13,
+    "q16_quotename": 14,
     "q170_winnowing_contamination": 9,
     "q171_source_template_matrix": 10,
     "q172_peak_concurrency": 10,
@@ -3750,7 +3750,7 @@ LAST_GREEN = {
     "q177_incremental_contamination": 10,
     "q178_stream_seasonality": 10,
     "q179_bpe_vocab_budget": 10,
-    "q17_agg_sweep": 13,
+    "q17_agg_sweep": 14,
     "q180_exact_substring_verify": 10,
     "q181_pq_codebook_refresh": 10,
     "q182_stream_peak_concurrency": 10,
@@ -3761,7 +3761,7 @@ LAST_GREEN = {
     "q187_lexical_detector_overlap": 11,
     "q188_tree_depth3_assignment": 11,
     "q189_tree_flat_agreement": 11,
-    "q18_tumbling_window": 13,
+    "q18_tumbling_window": 14,
     "q190_tree_probe_recall": 11,
     "q191_winnow_posting_histogram": 11,
     "q192_bigram_lm_fit": 12,
@@ -3772,11 +3772,11 @@ LAST_GREEN = {
     "q197_tree_multiprobe_recall": 12,
     "q198_stream_click_attribution": 12,
     "q199_star_fallback_recall": 12,
-    "q19_rate_delta_lag": 13,
+    "q19_rate_delta_lag": 14,
     "q200_dsir_importance_weights": 13,
     "q201_repetition_removal_audit": 13,
     "q202_contamination_cap_recall": 13,
-    "q20_copy_roundtrip": 13,
+    "q20_copy_roundtrip": 14,
     "q21_exact_dedup": 11,
     "q22_text_stats": 11,
     "q23_token_counts": 11,
@@ -3791,7 +3791,7 @@ LAST_GREEN = {
     "q32_binary_features": 11,
     "q33_embedding_near_dup": 11,
     "q34_near_dup_dedup": 11,
-    "q35_sessionization": 13,
+    "q35_sessionization": 14,
     "q36_ivf_assignment": 11,
     "q37_scalar_funcs": 11,
     "q38_bpe_token_counts": 11,
@@ -3801,8 +3801,8 @@ LAST_GREEN = {
     "q42_audio_frame_sample": 11,
     "q43_ann_bucketed_topk": 12,
     "q44_ivf_probe_topk": 12,
-    "q45_sliding_window": 13,
-    "q46_session_window": 13,
+    "q45_sliding_window": 14,
+    "q46_session_window": 14,
     "q47_ann_recall": 12,
     "q48_vocab_topk": 10,
     "q49_cross_source_neardups": 10,
@@ -3814,8 +3814,8 @@ LAST_GREEN = {
     "q55_embedding_dim_stats": 12,
     "q56_mixture_resample": 10,
     "q57_embedding_coverage": 12,
-    "q58_event_funnel": 7,
-    "q59_key_skew_histogram": 7,
+    "q58_event_funnel": 14,
+    "q59_key_skew_histogram": 14,
     "q60_event_enrichment": 10,
     "q61_curation_stats": 12,
     "q62_pack_fill": 12,

@@ -8,6 +8,8 @@ every config below is chosen to also be the right default on a large cluster:
 - shuffle partitions sized for the local box; on a real cluster AQE's
   ``coalescePartitions`` makes the initial number a ceiling, not a target.
 - Arrow enabled so any Pandas-UDF path is batch-columnar, never row-at-a-time.
+- a generated-code cache sized to the pipeline's working set (see
+  ``CODEGEN_CACHE_ENTRIES``).
 """
 
 from __future__ import annotations
@@ -16,6 +18,17 @@ import os
 
 from pyspark import SparkConf
 from pyspark.sql import SparkSession
+
+# Entries in Spark's JVM-wide cache of compiled whole-stage/expression
+# classes (``spark.sql.codegen.cache.maxEntries``, default 100). A q69
+# run compiles 148 distinct classes, and 17 registry queries need more
+# than 100 (q115 the most: 176, 198 after a second run). A working set
+# above the cap, revisited in the same order every run, makes LRU evict
+# each class just before its next use, so every warm run recompiled all
+# of them. The cache is 4 segments that each evict on their own, hence
+# >= 4x headroom over the largest working set. Measurements: SCALE.md
+# "Codegen cache sizing".
+CODEGEN_CACHE_ENTRIES = 1000
 
 
 def get_spark(
@@ -29,6 +42,11 @@ def get_spark(
     ``cpus`` defaults to $SPARK_GRAFT_CPUS or 32 — the driver's harness
     contract. On a real cluster you would drop ``master`` and submit via
     spark-submit; nothing else here is local-mode-specific.
+
+    The codegen cache size is a static conf: it binds only when this call
+    creates the session. A session built elsewhere (a caller's plain
+    ``SparkSession.builder`` session) keeps Spark's default of 100
+    entries; it cannot be raised at runtime.
     """
     cpus = str(cpus or os.environ.get("SPARK_GRAFT_CPUS", "32"))
     shuffle = str(shuffle_partitions or max(int(cpus), 32))
@@ -67,6 +85,8 @@ def get_spark(
         # the reference's greedy worker queue interleaves work items.
         .config("spark.scheduler.mode", "FAIR")
         .config("spark.ui.enabled", "false")
+        # static conf; reason at CODEGEN_CACHE_ENTRIES
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
     )
     for k, v in (extra_conf or {}).items():

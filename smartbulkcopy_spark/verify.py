@@ -40,8 +40,8 @@ class TableCheck:
     table: str
     source_rows: int
     destination_rows: int
-    source_hash: int | None = None
-    destination_hash: int | None = None
+    source_hash: int
+    destination_hash: int
 
     @property
     def rows_match(self) -> bool:
@@ -49,19 +49,12 @@ class TableCheck:
 
     @property
     def content_match(self) -> bool:
-        if self.source_hash is None or self.destination_hash is None:
-            return self.rows_match
         return self.rows_match and self.source_hash == self.destination_hash
 
 
 def check_copy(
-    source_df: DataFrame,
-    destination_df: DataFrame,
-    table: str,
-    with_hash: bool = True,
+    source_df: DataFrame, destination_df: DataFrame, table: str
 ) -> TableCheck:
-    if with_hash:
-        sc, sh = content_fingerprint(source_df)
-        dc, dh = content_fingerprint(destination_df)
-        return TableCheck(table, sc, dc, sh, dh)
-    return TableCheck(table, source_df.count(), destination_df.count())
+    sc, sh = content_fingerprint(source_df)
+    dc, dh = content_fingerprint(destination_df)
+    return TableCheck(table, sc, dc, sh, dh)

@@ -129,6 +129,16 @@ def test_detail_keeps_full_names_and_note():
     assert detail["copy"]["heap_partitioned_8x_rows_per_sec"] == 1234567
 
 
+def test_compile_counts_go_to_detail_only():
+    """Per-query codegen compile counts are detail-file data under full
+    names; the stdout line is byte-identical with or without them."""
+    timings, copies = worst_case_payloads()
+    compiles = {name: 140 for name in REGISTRY}
+    line, detail = bench.emit_payloads(timings, copies, 0.1, compiles=compiles)
+    assert line == bench.emit_payloads(timings, copies, 0.1)[0]
+    assert detail["compiles"] == compiles
+
+
 def test_line_degrades_gracefully_on_overflow():
     """If the compact line ever outgrows the driver tail (e.g. hundreds of
     registrations), bench must still print a parseable line with the

@@ -77,15 +77,19 @@ def test_cc_shuffle_partitions_scoped_and_restored(spark):
 def test_fused_parity_cc_matches_per_graph_cc(spark):
     """q199's round-14 fusion invariant: ONE CC over the parity-tagged
     disjoint union (graph-0 nodes 2*id, graph-1 nodes 2*id+1) recovers
-    each graph's own component minima exactly via lbl DIV 2 — parity
-    partitions the union, so min(2*id + g) = 2*min(id) + g within every
-    component."""
-    import pyspark.sql.functions as F
+    each graph's own component minima exactly via floor(lbl / 2) —
+    parity partitions the union, so min(2*id + g) = 2*min(id) + g within
+    every component. Negative ids are included: truncating % and DIV
+    would misfile an odd negative node and round its label up."""
+    from smartbulkcopy_spark.pipeline.dedup import (
+        connected_components,
+        parity_graph,
+    )
 
-    from smartbulkcopy_spark.pipeline.dedup import connected_components
-
-    g0 = [(1, 2), (2, 3), (10, 11)]  # components {1,2,3}, {10,11}
-    g1 = [(1, 5), (20, 21), (21, 22)]  # components {1,5}, {20,21,22}
+    # components {1,2,3}, {10,11}, {-7,-3,4}
+    g0 = [(1, 2), (2, 3), (10, 11), (-3, 4), (-7, -3)]
+    # components {1,5}, {20,21,22}, {-9,-2}, {-5,6}
+    g1 = [(1, 5), (20, 21), (21, 22), (-9, -2), (-5, 6)]
     sep = {}
     for gi, edges in enumerate([g0, g1]):
         pairs = spark.createDataFrame(edges, ["a_id", "b_id"])
@@ -100,12 +104,7 @@ def test_fused_parity_cc_matches_per_graph_cc(spark):
     for gi in (0, 1):
         got = {
             (r["doc_id"], r["l"])
-            for r in lab.where(F.col("node") % 2 == gi)
-            .select(
-                F.expr("node DIV 2").alias("doc_id"),
-                F.expr("lbl DIV 2").alias("l"),
-            )
-            .collect()
+            for r in parity_graph(lab, gi, "l").collect()
         }
         assert got == sep[gi]
 
