@@ -33,7 +33,11 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import SparkSession
 
-from smartbulkcopy_spark.catalog import LayoutSpec, ParquetCatalog
+from smartbulkcopy_spark.catalog import (
+    LayoutSpec,
+    ParquetCatalog,
+    dataset_state,
+)
 from smartbulkcopy_spark.config import EngineConfig, SafeCheck
 from smartbulkcopy_spark.ddl import hooks_for
 from smartbulkcopy_spark.model import TableInfo
@@ -85,10 +89,8 @@ class RunReport:
 def _source_fingerprint(root: str, tables: list[str]) -> dict[str, tuple]:
     out = {}
     for t in tables:
-        p = os.path.join(root, f"{t}.parquet")
         try:
-            st = os.stat(p)
-            out[t] = (st.st_mtime_ns, st.st_size)
+            out[t] = dataset_state(os.path.join(root, f"{t}.parquet"))
         except OSError:
             out[t] = (0, 0)
     return out

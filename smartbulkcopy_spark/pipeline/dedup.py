@@ -1078,6 +1078,8 @@ def q63(spark, sf_dir):
 # large-star/small-star variant (Kiveris et al., "Connected Components
 # in MapReduce and Beyond") halves path lengths per round; hash-min is
 # the right default for the shallow components dedup graphs produce.
+# Graphs up to LOCAL_CC_MAX_EDGES skip the rounds altogether: their edge
+# list fits the driver, where union-find labels it in one pass.
 # ---------------------------------------------------------------------------
 
 # Round budget: each round is one cheap id-keyed join + min-agg over the
@@ -1101,6 +1103,19 @@ CC_UNROLL = 2
 # behaves exactly as before; the common tiny graph stops paying
 # session-width near-empty tasks per round.
 CC_ROWS_PER_PARTITION = 4_000_000
+
+# Driver-side CC limit: a graph of at most this many edges is pulled to
+# the driver in one Arrow collect and labelled by union-find
+# (_driver_labels) instead of running the distributed rounds, each of
+# which pays Spark's fixed per-job latency whatever the data size
+# (q69's 25-edge sf0.01 graph: 11 jobs, 2.6-3.2 s distributed; 4 jobs,
+# ~0.6 s on the driver). On 10-node-chain graphs (4-core host) the
+# driver branch won at every size up to this limit: 800 edges 0.1-0.7 s
+# vs 2.5-4.5 s, 240k 0.7-1.5 s vs 9.5-12.5 s, 1M 2.5-3.3 s vs 39-46 s.
+# So the limit is set by driver memory: at 1M edges the driver's Python
+# process peaked 236 MB above its baseline. SCALE.md "Driver-side
+# connected components".
+LOCAL_CC_MAX_EDGES = 1 << 20
 
 
 def verified_pairs(spark, sf_dir):
@@ -1181,17 +1196,26 @@ def _round_truncator(spark, reliable):
     return _local
 
 
-def connected_components(
-    spark, pair_df, reliable=None, budget=None, shuffle_partitions=None
-):
-    """Hash-min label propagation over an undirected edge list, with a
-    pointer-doubling fallback for adversarial diameters.
+def connected_components(spark, pair_df, reliable=None, budget=None):
+    """Label every node of an undirected edge list with its component's
+    minimum id.
 
-    pair_df: DataFrame with columns (a_id, b_id) — one row per edge.
-    Returns (node, lbl) where lbl = min node id of the component. The
-    graph is any near-dup pair set (Jaccard-verified text pairs,
-    cosine-verified embedding pairs, ...) — orders of magnitude smaller
-    than the corpus, so the iteration runs on (id, label) pairs only.
+    pair_df: DataFrame with columns (a_id, b_id) — one row per edge;
+    edges with a null endpoint are not part of the graph. Returns
+    (node, lbl) in the edge columns' own type, where lbl = min node id
+    of the component. The graph is any near-dup pair set
+    (Jaccard-verified text pairs, cosine-verified embedding pairs, ...)
+    — orders of magnitude smaller than the corpus.
+
+    Which branch runs is chosen from the edge count:
+
+    - n_edges <= LOCAL_CC_MAX_EDGES (every fixture and bench graph): the
+      edges come to the driver in one Arrow collect and union-find
+      labels them (_driver_labels). No rounds, no checkpoints, no conf
+      change, and no Spark job besides the collect.
+    - larger graphs: distributed hash-min label propagation with a
+      pointer-doubling fallback (_distributed_labels); ``budget`` and
+      ``reliable`` apply to this branch only.
 
     budget: hash-min propagate steps before switching to the doubling
     phase (default MAX_CC_ROUNDS). Hash-min converges in O(diameter)
@@ -1214,68 +1238,62 @@ def connected_components(
     localCheckpoint() (False), or auto-detect from the session's
     checkpoint dir (None). The reliable path deletes each superseded
     round's file as the next materializes (see _ReliableRounds).
-    shuffle_partitions: scoped override of spark.sql.shuffle.partitions
-    for the iteration's own actions (each round checkpoints + counts
-    INSIDE this call, so the setting binds here, not at the caller's
-    later collect). Pass an explicit width when the edge list is
-    bounded by CONSTANTS (q199's synthetic study graph). Default None
-    derives a SCALE-ADAPTIVE width from the materialized edge count
-    (guide §2: size shuffles to the data, never a constant — the label
-    table is <= 2 x edges rows, so CC_ROWS_PER_PARTITION label rows
-    per reduce partition, floored at 4 and capped at the session
-    width; a 100 TB-scale pair graph derives the session width and
-    iterates exactly as before, while the common tiny verified-pair
-    graph stops paying ~session-width near-empty tasks per round).
-    When the iteration runs NARROWER than the session width, AQE is
-    also scoped OFF for the loop: its per-job replanning is pure
-    latency on kilobyte rounds (measured ~25% of q117's CC wall), and
-    the skew/coalesce protections it buys only matter at data-sized
-    widths, where the derived width equals the session width and AQE
-    stays on. Both confs restore in the finally, safe in the engine's
-    one-query-at-a-time sessions."""
+
+    The distributed iteration runs at a SCALE-ADAPTIVE shuffle width
+    derived from the edge count (guide §2: the label table is <= 2 x
+    edges rows, so CC_ROWS_PER_PARTITION label rows per reduce
+    partition, floored at 4 and capped at the session width), bound
+    through a scoped spark.sql.shuffle.partitions because each round
+    checkpoints + counts INSIDE this call. When that width is narrower
+    than the session's, AQE is also scoped OFF for the loop: its
+    per-job replanning is pure latency on kilobyte rounds (measured
+    ~25% of q117's CC wall). Both confs restore in the finally, safe in
+    the engine's one-query-at-a-time sessions; the driver branch
+    touches neither."""
     # .select() wraps caller-provided pairs in a fresh plan node, so the
-    # persist/unpersist below never touches the caller's own cache state.
-    # (Analysis happens HERE, before the conf override below — a bad
-    # edge frame must not leave the session at study width.)
-    edges = pair_df.select("a_id", "b_id")
-    # The truncator probe (checkpoint-dir detection) can raise; build it
-    # BEFORE the persist and the conf override so a failure can't leak
-    # the study width into the session or strand a cached frame
-    # (round-13 ADVICE — it depends on the checkpoint config, not on
-    # shuffle width). The .select above still runs analysis first.
-    trunc = _round_truncator(spark, reliable)
-    edges = edges.persist()
-    # Materialize BEFORE the scoped conf: the caller's pair chain (the
-    # expensive part) must run at full session width; only the tiny
-    # (id, label) iteration below runs at the derived width. A runtime
-    # failure HERE (post-analysis: assert_true guard, executor error)
-    # must not strand the persisted frame or the truncator — the main
-    # try/finally below only guards the iteration (round-13 ADVICE).
-    try:
-        n_edges = edges.count()
-    except Exception:
-        edges.unpersist()
-        trunc.close()
-        raise
-    _sess_sp = spark.conf.get("spark.sql.shuffle.partitions")
-    if shuffle_partitions is None:
-        shuffle_partitions = min(
-            int(_sess_sp),
-            max(4, -(-2 * n_edges // CC_ROWS_PER_PARTITION)),
-        )
-    _prev_sp = _sess_sp
-    _narrowed = int(shuffle_partitions) < int(_sess_sp)
-    _prev_aqe = spark.conf.get("spark.sql.adaptive.enabled")
-    spark.conf.set(
-        "spark.sql.shuffle.partitions", str(shuffle_partitions)
+    # persist/unpersist below never touches the caller's own cache
+    # state, and a bad edge frame fails analysis before anything else.
+    edges = pair_df.select("a_id", "b_id").where(
+        F.col("a_id").isNotNull() & F.col("b_id").isNotNull()
     )
+    sym = edges.select(
+        F.col("a_id").alias("u"), F.col("b_id").alias("v")
+    ).union(edges.select(F.col("b_id").alias("u"), F.col("a_id").alias("v")))
+    edges = edges.persist()
+    # Both branches return frames that no longer read the edge cache:
+    # driver labels are Arrow-built, distributed ones checkpointed.
+    try:
+        # One action runs the caller's pair chain (the expensive part)
+        # at full session width, fills the edge cache and brings a
+        # driver-sized graph home whole; no more than
+        # LOCAL_CC_MAX_EDGES + 1 edges ever reach the driver. (A count
+        # first would cost three jobs on the fresh cache under AQE: the
+        # cache stage plus two aggregation stages.)
+        head = edges.limit(LOCAL_CC_MAX_EDGES + 1).toArrow()
+        if head.num_rows <= LOCAL_CC_MAX_EDGES:
+            return _driver_labels(spark, head, sym.schema["u"].dataType)
+        return _distributed_labels(
+            spark, sym, edges.count(), reliable, budget
+        )
+    finally:
+        edges.unpersist()
+
+
+def _distributed_labels(spark, sym, n_edges, reliable, budget):
+    """Hash-min label propagation over the symmetric edge list ``sym``
+    (u, v), with the pointer-doubling fallback; see
+    connected_components for the round structure and conf scoping."""
+    trunc = _round_truncator(spark, reliable)
+    _sess_sp = spark.conf.get("spark.sql.shuffle.partitions")
+    width = min(
+        int(_sess_sp), max(4, -(-2 * n_edges // CC_ROWS_PER_PARTITION))
+    )
+    _narrowed = width < int(_sess_sp)
+    _prev_aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.shuffle.partitions", str(width))
     if _narrowed:
         spark.conf.set("spark.sql.adaptive.enabled", "false")
     try:
-        sym = edges.select(
-            F.col("a_id").alias("u"), F.col("b_id").alias("v")
-        ).union(edges.select(F.col("b_id").alias("u"), F.col("a_id").alias("v")))
-
         # Init fuses the first propagation round: every member appears as
         # u in the symmetric edge list, so label(u) = min(u, min neighbor)
         # is both the node inventory and one round of hash-min for free.
@@ -1370,12 +1388,52 @@ def connected_components(
             # iteration — is already banked.
             labels = labels.localCheckpoint()
     finally:
-        edges.unpersist()
         trunc.close()
-        spark.conf.set("spark.sql.shuffle.partitions", _prev_sp)
+        spark.conf.set("spark.sql.shuffle.partitions", _sess_sp)
         if _narrowed:
             spark.conf.set("spark.sql.adaptive.enabled", _prev_aqe)
     return labels
+
+
+def _driver_labels(spark, tbl, id_type):
+    """Union-find labels of a driver-sized Arrow edge table (see
+    LOCAL_CC_MAX_EDGES): union-by-smaller-root over dense ranks makes
+    every root its set's minimum id, and the labels go back as an
+    Arrow-built frame of ``id_type`` (no Python workers, no
+    executor-resident blocks, no Spark job)."""
+    import numpy as np
+    import pyarrow as pa
+    from pyspark.sql.types import StructField, StructType
+
+    a = tbl.column("a_id").to_numpy()
+    ids, pos = np.unique(
+        np.concatenate([a, tbl.column("b_id").to_numpy()]),
+        return_inverse=True,
+    )
+    # np.unique sorts, so rank order is id order: the smaller root rank
+    # is the smaller id, and each root stays its set's minimum.
+    parent = list(range(len(ids)))
+    for u, v in zip(pos[: len(a)].tolist(), pos[len(a) :].tolist()):
+        while parent[u] != u:  # path halving
+            parent[u] = u = parent[parent[u]]
+        while parent[v] != v:
+            parent[v] = v = parent[parent[v]]
+        if u < v:
+            parent[v] = u
+        elif v < u:
+            parent[u] = v
+    root = np.asarray(parent, dtype=np.int64)
+    while True:  # pointer jumping: every rank straight to its root
+        up = root[root]
+        if np.array_equal(up, root):
+            break
+        root = up
+    return spark.createDataFrame(
+        pa.table({"node": ids, "lbl": ids[root]}),
+        StructType(
+            [StructField("node", id_type), StructField("lbl", id_type)]
+        ),
+    )
 
 
 def dedup_clusters(spark, sf_dir, pairs=None, reliable=None):
@@ -1413,7 +1471,8 @@ def dedup_clusters(spark, sf_dir, pairs=None, reliable=None):
     doc="Connected-component dedup clusters over VERIFIED near-dup pairs:"
     " each member document labeled with its component's min doc_id."
     " Transitive closure that q34's pair-local keep-list cannot express;"
-    " iterative hash-min label propagation on (id, label) pairs only,"
+    " union-find on the driver for a driver-sized graph, else iterative"
+    " hash-min label propagation on (id, label) pairs only,"
     " localCheckpointed per round. Oracle: DuckDB recursive-CTE"
     " reachability over the same verified pair set.",
 )
@@ -3143,8 +3202,8 @@ def star_fallback_recall(spark, sf_dir):
         .distinct()
     )
     # both graphs are bounded by constants (<= STUDY_SEEDS x 30
-    # members), so the CC iterations run at study width, not corpus
-    # width — see connected_components.shuffle_partitions.
+    # members), far under LOCAL_CC_MAX_EDGES, so the CC always labels
+    # them on the driver.
     # ONE fused CC labels BOTH graphs (round 14): parity-tagging the
     # node ids (star nodes 2*id, clique nodes 2*id+1) makes the two
     # graphs disjoint inside a single edge list, so one label
@@ -3163,7 +3222,7 @@ def star_fallback_recall(spark, sf_dir):
             (F.col("b_id") * 2 + 1).alias("b_id"),
         )
     )
-    lab = connected_components(spark, tagged, shuffle_partitions=8)
+    lab = connected_components(spark, tagged)
     j = parity_graph(lab, 0, "sl").join(
         parity_graph(lab, 1, "cl"), "doc_id", "full"
     )

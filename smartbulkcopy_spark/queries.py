@@ -27,6 +27,8 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.window import Window
 
+from smartbulkcopy_spark.catalog import dataset_state
+
 DEC182 = "decimal(18,2)"
 
 
@@ -95,26 +97,14 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 # re-reads parquet footers as a small job on EVERY spark.read.parquet —
 # measured 80-120 ms per table() call vs 15-35 ms with an explicit
 # schema, across hundreds of table() calls per bench sweep. Keyed on
-# (path, mtime, size) so a rewritten file re-infers; equivalent to what
-# a production metastore provides.
+# (path, catalog.dataset_state) so a rewritten file or part file
+# re-infers; equivalent to what a production metastore provides.
 _SCHEMA_MEMO: dict[tuple, object] = {}
 
 
 def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
     try:
-        st = os.stat(path)
-        key: tuple = (path, st.st_mtime_ns, st.st_size)
-        if not os.path.isfile(path):
-            # Directory dataset: rewriting a part file IN PLACE changes
-            # neither the directory's mtime nor its size, so key on the
-            # max child (mtime, size) too (round-13 ADVICE).
-            with os.scandir(path) as it:
-                kids = [e.stat() for e in it if e.is_file()]
-            key += (
-                max((k.st_mtime_ns for k in kids), default=0),
-                max((k.st_size for k in kids), default=0),
-                len(kids),
-            )
+        key = (path, *dataset_state(path))
     except OSError:
         return spark.read.parquet(path)
     schema = _SCHEMA_MEMO.get(key)
@@ -174,11 +164,12 @@ def eager_parallel(*builders):
 
     HARD CONTRACT (round-13 ADVICE): builders run concurrently against
     the session-GLOBAL SQL conf, so no builder may reach a conf-scoping
-    section — connected_components (which narrows
-    spark.sql.shuffle.partitions and can disable AQE mid-flight) or a
-    streaming drain (state_partitions override). A threaded builder
-    that mutates session conf silently re-plans its SIBLINGS at the
-    narrowed width. Keep CC/streaming chains on the caller's thread."""
+    section — connected_components on a graph over LOCAL_CC_MAX_EDGES
+    (its distributed rounds narrow spark.sql.shuffle.partitions and can
+    disable AQE mid-flight) or a streaming drain (state_partitions
+    override). A threaded builder that mutates session conf silently
+    re-plans its SIBLINGS at the narrowed width. Keep CC/streaming
+    chains on the caller's thread."""
     if len(builders) == 1:
         return [builders[0]()]
     from concurrent.futures import ThreadPoolExecutor

@@ -305,3 +305,37 @@ def test_cli_usage_errors_are_config_exit():
     assert main([]) == EXIT_CONFIG
     assert main(["curate"]) == EXIT_CONFIG
     assert main(["curate", "only-one-arg"]) == EXIT_CONFIG
+
+
+def test_safe_check_catches_part_file_rewritten_in_place(
+    spark, tmp_path, monkeypatch
+):
+    """A directory dataset whose part file is rewritten in place during
+    the copy keeps the directory's own mtime and size, so the safe-check
+    must look at the part files: the run exits non-zero."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    part = tmp_path / "src" / "t.parquet" / "part-00000.parquet"
+    part.parent.mkdir(parents=True)
+    pq.write_table(pa.table({"k": [1, 2, 3], "v": [10, 20, 30]}), part)
+    table_dir = part.parent.stat()
+
+    copy_one = CopyExecutor._copy_one
+
+    def rewrite_then_copy(self, *args, **kwargs):
+        pq.write_table(pa.table({"k": [1, 2, 3], "v": [11, 21, 31]}), part)
+        return copy_one(self, *args, **kwargs)
+
+    monkeypatch.setattr(CopyExecutor, "_copy_one", rewrite_then_copy)
+    cfg = _write_config(tmp_path, tmp_path / "src", tmp_path / "dest", ["t"])
+    report = run_from_config_file(
+        cfg, spark=spark, monitor_interval=60, log=lambda *_: None
+    )
+    after = part.parent.stat()
+    assert (after.st_mtime_ns, after.st_size) == (
+        table_dir.st_mtime_ns,
+        table_dir.st_size,
+    ), "the rewrite must be invisible at the directory level"
+    assert report.exit_code == EXIT_CONFIG, report.messages
+    assert any("safe-check failed" in m for m in report.messages)

@@ -369,11 +369,17 @@ def test_cluster_keep_list_refines_pair_keep_list(spark, sf_dir):
     assert cluster_keep <= pair_keep
 
 
-def test_dedup_clusters_reliable_checkpoint_matches_local(spark, sf_dir, tmp_path):
+def test_dedup_clusters_reliable_checkpoint_matches_local(
+    spark, sf_dir, tmp_path, monkeypatch
+):
     """The fault-tolerant checkpoint() path (cluster deployments: survives
     executor loss mid-iteration) must produce bit-identical labels to the
-    default localCheckpoint() path."""
+    default localCheckpoint() path. Both are rounds of the distributed
+    branch, so the fixture graph is forced onto it."""
+    from smartbulkcopy_spark.pipeline import dedup
     from smartbulkcopy_spark.pipeline.dedup import dedup_clusters
+
+    monkeypatch.setattr(dedup, "LOCAL_CC_MAX_EDGES", 0)
 
     local = dedup_clusters(spark, sf_dir, reliable=False).collect()
     assert local, "fixture must yield clusters"
@@ -534,16 +540,22 @@ def test_release_caches_reclaims_eager_intermediates(spark, sf_dir):
     assert release_caches() == 0  # idempotent
 
 
-def test_cc_doubling_fallback_converges_past_budget(spark, sf_dir):
+def test_cc_doubling_fallback_converges_past_budget(
+    spark, sf_dir, monkeypatch
+):
     """A path graph of diameter far beyond the hash-min budget must still
     converge (pointer-doubling fallback: O(log d) extra rounds) with the
     exact component-minimum labels, and the fallback must agree with the
-    pure hash-min result on the real fixture graph."""
+    pure hash-min result on the real fixture graph. Rounds run only on
+    the distributed branch, so every graph here is forced onto it."""
+    from smartbulkcopy_spark.pipeline import dedup
     from smartbulkcopy_spark.pipeline.dedup import (
         connected_components,
         dedup_clusters,
         verified_pairs,
     )
+
+    monkeypatch.setattr(dedup, "LOCAL_CC_MAX_EDGES", 0)
 
     # 0-1-2-...-120: diameter 120 >> budget 3. Hash-min alone would need
     # 120 rounds; budget 3 forces the doubling phase almost immediately.
@@ -566,6 +578,70 @@ def test_cc_doubling_fallback_converges_past_budget(spark, sf_dir):
     assert via_fallback == sorted(
         (r["doc_id"], r["cluster_rep"]) for r in base
     )
+
+
+def _cc_set(labels):
+    return sorted((r["node"], r["lbl"]) for r in labels.collect())
+
+
+def test_cc_driver_branch_matches_distributed(spark, sf_dir, monkeypatch):
+    """The driver branch (union-find over the collected edges) labels
+    every node exactly as the distributed rounds do, and in the edge
+    columns' own type: on the q69 fixture graph, and on a synthetic
+    graph with negative INT ids and one isolated edge."""
+    from pyspark.sql.types import IntegerType
+
+    from smartbulkcopy_spark.pipeline import dedup
+    from smartbulkcopy_spark.pipeline.dedup import (
+        connected_components,
+        verified_pairs,
+    )
+
+    synthetic = spark.createDataFrame(
+        # {-9,-4,0,3,7} via a chain entered from both ends, {-2,5}
+        # isolated, {11,12,13} a triangle with a repeated edge
+        [(3, 7), (-4, 0), (0, 3), (7, -9), (-2, 5),
+         (11, 12), (12, 13), (13, 11), (12, 11)],
+        "a_id int, b_id int",
+    )
+    for pairs in (verified_pairs(spark, sf_dir), synthetic):
+        driver = connected_components(spark, pairs)
+        with monkeypatch.context() as m:
+            m.setattr(dedup, "LOCAL_CC_MAX_EDGES", 0)
+            distributed = connected_components(spark, pairs)
+        assert driver.schema == distributed.schema
+        got = _cc_set(driver)
+        assert got, "graph must not be empty"
+        assert got == _cc_set(distributed)
+    assert driver.schema["lbl"].dataType == IntegerType()
+    assert dict(got) == {
+        -9: -9, -4: -9, 0: -9, 3: -9, 7: -9,
+        -2: -2, 5: -2, 11: 11, 12: 11, 13: 11,
+    }
+
+
+def test_cc_small_graph_launches_at_most_two_jobs(spark):
+    """Load-free pin of the driver branch: a small graph costs at most
+    two Spark jobs under the caller's job group (the distributed rounds
+    cost 10 in all: per-round checkpoints and convergence counts), and
+    the labels come back without another job."""
+    from smartbulkcopy_spark.pipeline.dedup import connected_components
+
+    sc = spark.sparkContext
+    pairs = spark.createDataFrame(
+        [(1, 2), (2, 3), (10, 11)], ["a_id", "b_id"]
+    )
+    group = "test-cc-small-graph-jobs"
+    sc.setJobGroup(group, "driver-side CC job count")
+    try:
+        labels = connected_components(spark, pairs)
+        got = _cc_set(labels)
+        jobs = sc.statusTracker().getJobIdsForGroup(group)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert got == [(1, 1), (2, 1), (3, 1), (10, 10), (11, 10)]
+    assert len(jobs) <= 2, sorted(jobs)
 
 
 def test_q80_redaction_eliminates_leakage(spark, sf_dir):

@@ -136,187 +136,3 @@ def test_round_closeout_discipline():
     missing_section = [n for n in newest if f"## {n}" not in plans]
     assert not missing_section, f"no PLANS.md section: {missing_section}"
 
-
-def test_r9_window_prediction():
-    """Round-8 verdict item 6: with the qNN tie-break, the round-9
-    rotation window must be exactly the 27 most-senior never-graded
-    queries in query-number order (q143, q145..q170). Guarded on the
-    ledger state so the pin retires itself once round 9 is folded."""
-    from smartbulkcopy_spark.queries import (
-        DRIVER_WINDOW,
-        LAST_GREEN,
-        TIER1,
-        ordered_names,
-    )
-
-    if max(LAST_GREEN.values()) != 8:
-        pytest.skip("ledger has moved past round 8; pin satisfied")
-    rotation = ordered_names()[len(TIER1) : DRIVER_WINDOW]
-    expected = ["q143_hard_negative_mining"] + [
-        n
-        for n in sorted(
-            REGISTRY,
-            key=lambda n: int(n[1 : n.index("_")]),
-        )
-        if 145 <= int(n[1 : n.index("_")]) <= 170
-    ]
-    assert rotation == expected
-
-
-def test_r10_window_prediction():
-    """Round-9 verdict item 1: the round-10 rotation window must take
-    the 8 spilled never-graded rows (q171..q178), the seven round-10
-    registrations (q179..q185), and the full r04-stale dozen — exactly
-    filling the 27 rotation slots. Guarded on the ledger state so the
-    pin retires itself once round 10 is folded."""
-    from smartbulkcopy_spark.queries import (
-        DRIVER_WINDOW,
-        LAST_GREEN,
-        TIER1,
-        ordered_names,
-    )
-
-    if max(LAST_GREEN.values()) != 9:
-        pytest.skip("ledger has moved past round 9; pin satisfied")
-    rotation = ordered_names()[len(TIER1) : DRIVER_WINDOW]
-    bynum = sorted(REGISTRY, key=lambda n: int(n[1 : n.index("_")]))
-    never_graded = [
-        n for n in bynum if 171 <= int(n[1 : n.index("_")]) <= 185
-    ]
-    assert len(never_graded) == 15
-    stale_r04 = [
-        n for n in bynum if LAST_GREEN.get(n) == 4
-    ]  # q48 q49 q50 q52 q53 q56 q60 q63 q64 q65 q66 q68
-    assert len(stale_r04) == 12
-    expected = never_graded + stale_r04
-    assert rotation == expected
-
-
-def test_r11_window_prediction():
-    """Round-10 verdict item 2: with the never-graded backlog at zero,
-    the round-11 rotation window must be the six round-11
-    registrations (q186..q191, never-graded sorts first) followed by
-    the r05-stale block in query-number order — q21..q34 + q36..q42
-    fill the remaining 21 slots (q43/q44/q47/q51/q54/q55 wait for
-    r12). Guarded on the ledger state so the pin retires itself once
-    round 11 is folded."""
-    from smartbulkcopy_spark.queries import (
-        DRIVER_WINDOW,
-        LAST_GREEN,
-        QUEUED_SINCE,
-        TIER1,
-        ordered_names,
-    )
-
-    if max(LAST_GREEN.values()) != 10:
-        pytest.skip("ledger has moved past round 10; pin satisfied")
-    rotation = ordered_names()[len(TIER1) : DRIVER_WINDOW]
-
-    def qnum(n):
-        return int(n[1 : n.index("_")])
-
-    new_r11 = sorted(
-        (n for n, b in QUEUED_SINCE.items() if b >= 110), key=qnum
-    )
-    assert len(new_r11) == 6
-    stale_r05 = sorted(
-        (n for n in REGISTRY if LAST_GREEN.get(n) == 5), key=qnum
-    )
-    assert len(stale_r05) == 27
-    expected = new_r11 + stale_r05[: DRIVER_WINDOW - len(TIER1) - 6]
-    assert rotation == expected
-
-
-def test_r12_window_prediction():
-    """Round-11 verdict item 2: the round-12 rotation window must be
-    the eight round-12 registrations (q192..q199, never-graded sorts
-    first, seniority = registration batch = query number here),
-    followed by the r05-stale residue (q43/q44/q47/q51/q54/q55) and
-    then the r06 block in query-number order filling the remaining 13
-    slots (q57, q61, q62, q67, q69..q77). Guarded on the ledger state
-    so the pin retires itself once round 12 is folded."""
-    from smartbulkcopy_spark.queries import (
-        DRIVER_WINDOW,
-        LAST_GREEN,
-        QUEUED_SINCE,
-        TIER1,
-        ordered_names,
-    )
-
-    if max(LAST_GREEN.values()) != 11:
-        pytest.skip("ledger has moved past round 11; pin satisfied")
-    rotation = ordered_names()[len(TIER1) : DRIVER_WINDOW]
-
-    def qnum(n):
-        return int(n[1 : n.index("_")])
-
-    new_r12 = sorted(
-        (n for n, b in QUEUED_SINCE.items() if b >= 120), key=qnum
-    )
-    assert len(new_r12) == 8
-    stale_r05 = sorted(
-        (n for n in REGISTRY if LAST_GREEN.get(n) == 5), key=qnum
-    )
-    assert stale_r05 == [
-        "q43_ann_bucketed_topk",
-        "q44_ivf_probe_topk",
-        "q47_ann_recall",
-        "q51_pack_offsets",
-        "q54_embedding_norm_audit",
-        "q55_embedding_dim_stats",
-    ]
-    stale_r06 = sorted(
-        (n for n in REGISTRY if LAST_GREEN.get(n) == 6), key=qnum
-    )
-    expected = (new_r12 + stale_r05 + stale_r06)[
-        : DRIVER_WINDOW - len(TIER1)
-    ]
-    assert rotation == expected
-
-
-def test_r13_window_prediction():
-    """Round-12 verdict items 2/3: the round-13 rotation window must
-    be the three round-13 registrations (q200/q201 staged builders +
-    the q202 cap-recall study; never-graded sorts first), followed by
-    the r06-stale block (q78..q91, 14 rows) and then the r07 block in
-    (QUEUED_SINCE, query-number) order filling the remaining 10 slots
-    (q92..q101 — q58/q59 carry no QUEUED_SINCE entry and sort last in
-    their LAST_GREEN class, exactly as ordered_names() does).
-    Guarded on the ledger state so the pin retires itself once round
-    13 is folded."""
-    from smartbulkcopy_spark.queries import (
-        DRIVER_WINDOW,
-        LAST_GREEN,
-        QUEUED_SINCE,
-        TIER1,
-        ordered_names,
-    )
-
-    if max(LAST_GREEN.values()) != 12:
-        pytest.skip("ledger has moved past round 12; pin satisfied")
-    rotation = ordered_names()[len(TIER1) : DRIVER_WINDOW]
-
-    def qnum(n):
-        return int(n[1 : n.index("_")])
-
-    new_r13 = sorted(
-        (n for n, b in QUEUED_SINCE.items() if b >= 130), key=qnum
-    )
-    assert new_r13 == [
-        "q200_dsir_importance_weights",
-        "q201_repetition_removal_audit",
-        "q202_contamination_cap_recall",
-    ]
-    stale_r06 = sorted(
-        (n for n in REGISTRY if LAST_GREEN.get(n) == 6), key=qnum
-    )
-    assert len(stale_r06) == 14 and stale_r06[0] == "q78_burst_detection"
-    stale_r07 = sorted(
-        (n for n in REGISTRY if LAST_GREEN.get(n) == 7),
-        key=lambda n: (QUEUED_SINCE.get(n, 99), qnum(n)),
-    )
-    expected = (new_r13 + stale_r06 + stale_r07)[
-        : DRIVER_WINDOW - len(TIER1)
-    ]
-    assert expected[-1] == "q101_hourly_cohort_retention"
-    assert rotation == expected

@@ -1,5 +1,5 @@
 """Round-12 registrations: the star-fallback recall study (q199), the
-scoped CC shuffle-width override it rides on, and registration-shape
+session-conf hygiene of the CC it rides on, and registration-shape
 pins for the shipped staged queue (q192-q198 behavior is covered by the
 builder tests in test_round11_ops.py; cross-engine equality by the
 driver-mimic/oracle suite)."""
@@ -55,37 +55,45 @@ def test_star_fallback_study_sizes_straddle_cap(spark, sf_dir):
     assert any(s > MINHASH_CLIQUE_CAP for s in sizes)
 
 
-def test_cc_shuffle_partitions_scoped_and_restored(spark):
-    """connected_components(shuffle_partitions=N) must bind N for its
-    own actions and restore the session default even on success; the
-    labels it returns must already be materialized (checkpoint-backed)
-    so later consumption does not silently re-plan at the narrow
-    width."""
+_CC_CONFS = ("spark.sql.shuffle.partitions", "spark.sql.adaptive.enabled")
+
+
+def test_cc_shuffle_partitions_scoped_and_restored(spark, monkeypatch):
+    """connected_components leaves the session's shuffle width and AQE
+    flag as it found them on both branches (the distributed one scopes
+    its own width for its rounds), and the labels it returns are
+    already materialized, so later consumption re-plans nothing."""
+    from smartbulkcopy_spark.pipeline import dedup
     from smartbulkcopy_spark.pipeline.dedup import connected_components
 
-    key = "spark.sql.shuffle.partitions"
-    before = spark.conf.get(key)
+    before = [spark.conf.get(k) for k in _CC_CONFS]
     pairs = spark.createDataFrame(
         [(1, 2), (2, 3), (10, 11)], ["a_id", "b_id"]
     )
-    labels = connected_components(spark, pairs, shuffle_partitions=4)
-    assert spark.conf.get(key) == before
-    got = {(r["node"], r["lbl"]) for r in labels.collect()}
-    assert got == {(1, 1), (2, 1), (3, 1), (10, 10), (11, 10)}
+    for limit in (dedup.LOCAL_CC_MAX_EDGES, 0):  # driver, distributed
+        monkeypatch.setattr(dedup, "LOCAL_CC_MAX_EDGES", limit)
+        labels = connected_components(spark, pairs)
+        assert [spark.conf.get(k) for k in _CC_CONFS] == before
+        got = {(r["node"], r["lbl"]) for r in labels.collect()}
+        assert got == {(1, 1), (2, 1), (3, 1), (10, 10), (11, 10)}
 
 
-def test_fused_parity_cc_matches_per_graph_cc(spark):
+def test_fused_parity_cc_matches_per_graph_cc(spark, monkeypatch):
     """q199's round-14 fusion invariant: ONE CC over the parity-tagged
     disjoint union (graph-0 nodes 2*id, graph-1 nodes 2*id+1) recovers
     each graph's own component minima exactly via floor(lbl / 2) —
     parity partitions the union, so min(2*id + g) = 2*min(id) + g within
     every component. Negative ids are included: truncating % and DIV
-    would misfile an odd negative node and round its label up."""
+    would misfile an odd negative node and round its label up. Run on
+    the distributed branch (q199 itself always takes the driver one,
+    which test_cc_driver_branch_matches_distributed pins)."""
+    from smartbulkcopy_spark.pipeline import dedup
     from smartbulkcopy_spark.pipeline.dedup import (
         connected_components,
         parity_graph,
     )
 
+    monkeypatch.setattr(dedup, "LOCAL_CC_MAX_EDGES", 0)
     # components {1,2,3}, {10,11}, {-7,-3,4}
     g0 = [(1, 2), (2, 3), (10, 11), (-3, 4), (-7, -3)]
     # components {1,5}, {20,21,22}, {-9,-2}, {-5,6}
@@ -93,14 +101,14 @@ def test_fused_parity_cc_matches_per_graph_cc(spark):
     sep = {}
     for gi, edges in enumerate([g0, g1]):
         pairs = spark.createDataFrame(edges, ["a_id", "b_id"])
-        lab = connected_components(spark, pairs, shuffle_partitions=4)
+        lab = connected_components(spark, pairs)
         sep[gi] = {(r["node"], r["lbl"]) for r in lab.collect()}
     tagged = spark.createDataFrame(
         [(a * 2, b * 2) for a, b in g0]
         + [(a * 2 + 1, b * 2 + 1) for a, b in g1],
         ["a_id", "b_id"],
     )
-    lab = connected_components(spark, tagged, shuffle_partitions=4)
+    lab = connected_components(spark, tagged)
     for gi in (0, 1):
         got = {
             (r["doc_id"], r["l"])
@@ -109,18 +117,19 @@ def test_fused_parity_cc_matches_per_graph_cc(spark):
         assert got == sep[gi]
 
 
-def test_cc_shuffle_partitions_restored_on_error(spark):
-    """A bad edge frame must not leave the session at study width:
-    analysis runs BEFORE the override binds, and any later failure
-    restores through the finally."""
+def test_cc_shuffle_partitions_restored_on_error(spark, monkeypatch):
+    """A bad edge frame fails before either branch touches the session:
+    its shuffle width and AQE flag are unchanged afterwards."""
+    from smartbulkcopy_spark.pipeline import dedup
     from smartbulkcopy_spark.pipeline.dedup import connected_components
 
-    key = "spark.sql.shuffle.partitions"
-    before = spark.conf.get(key)
+    before = [spark.conf.get(k) for k in _CC_CONFS]
     bad = spark.createDataFrame([(1, 2)], ["a_id", "wrong_name"])
-    with pytest.raises(Exception):
-        connected_components(spark, bad, shuffle_partitions=4)
-    assert spark.conf.get(key) == before
+    for limit in (dedup.LOCAL_CC_MAX_EDGES, 0):  # driver, distributed
+        monkeypatch.setattr(dedup, "LOCAL_CC_MAX_EDGES", limit)
+        with pytest.raises(Exception):
+            connected_components(spark, bad)
+        assert [spark.conf.get(k) for k in _CC_CONFS] == before
 
 
 def test_round12_registrations_complete():
