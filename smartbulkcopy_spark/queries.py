@@ -68,29 +68,28 @@ def trunc_hour_ntz(col: str):
 
 
 def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Load one synthetic table (TESTDATA.md).
+    """Load one synthetic table (TESTDATA.md); ``events.ts`` always
+    arrives as TIMESTAMP_NTZ (see events_ts_ntz)."""
+    df = _read_parquet(spark, os.path.join(sf_dir, f"{name}.parquet"))
+    return events_ts_ntz(df) if name == "events" else df
 
-    ``events.ts`` is nanosecond parquet, which Spark 4 refuses by default;
-    we read it as raw nanos (legacy conf) and rebuild a TIMESTAMP_NTZ with
-    pure interval arithmetic so the result is session-timezone-independent.
-    """
-    path = os.path.join(sf_dir, f"{name}.parquet")
-    if name == "events":
-        # Our session factory sets this globally; guard-set it here only for
-        # foreign sessions (e.g. the driver's own) that didn't go through it.
-        if spark.conf.get("spark.sql.legacy.parquet.nanosAsLong", "false") != "true":
-            spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        df = _read_parquet(spark, path)
-        if dict(df.dtypes).get("ts") == "bigint":
-            df = df.withColumn(
-                "ts",
-                F.expr(
-                    "timestampadd(MICROSECOND, ts DIV 1000,"
-                    " TIMESTAMP_NTZ '1970-01-01 00:00:00')"
-                ),
-            )
+
+def events_ts_ntz(df: DataFrame) -> DataFrame:
+    """``ts`` as TIMESTAMP_NTZ. Microsecond parquet (every fixture)
+    already arrives so. Nanosecond parquet (pandas' default unit) reads
+    only under ``spark.sql.legacy.parquet.nanosAsLong``, which get_spark
+    sets at creation and nothing sets at run time, and then arrives as
+    bigint nanos: rebuilt here with pure interval arithmetic, so the
+    result is session-timezone-independent."""
+    if dict(df.dtypes).get("ts") != "bigint":
         return df
-    return _read_parquet(spark, path)
+    return df.withColumn(
+        "ts",
+        F.expr(
+            "timestampadd(MICROSECOND, ts DIV 1000,"
+            " TIMESTAMP_NTZ '1970-01-01 00:00:00')"
+        ),
+    )
 
 
 # Schema METADATA memo (never data, never results): schema inference
@@ -127,14 +126,20 @@ _LIVE_CACHES: list[DataFrame] = []
 def eager(df: DataFrame) -> DataFrame:
     """persist + materialize-before-fan-out (the q33 pattern: a lazy
     persist lets multiple consumers race to materialize it
-    independently), tracked for later release_caches()."""
+    independently), tracked for later release_caches().
+
+    The one session-conf write in the package that outlives its call:
+    on a foreign session (the driver's own: 200 shuffle partitions,
+    flag off by default) it turns on
+    ``canChangeCachedPlanOutputPartitioning``, which our session
+    factory sets at creation. Without it every cached materialization
+    runs at the raw session width with NO AQE coalescing, ~200
+    near-empty tasks per eager(); the guard took a driver-mimic subset
+    from 53 to 35 s. It is not restored because the cached plans it
+    shapes outlive the call, and eager() runs inside eager_parallel
+    threads, where a save/restore would race its siblings; the value
+    only ever moves one way."""
     spark = df.sparkSession
-    # Our session factory sets this globally; guard-set it here only
-    # for foreign sessions (the driver's own: 200 shuffle partitions,
-    # flag off by default) — without it every cached materialization
-    # runs at the raw session width with NO AQE coalescing, ~200
-    # near-empty tasks per eager() (round-13 flag, round-14 guard;
-    # the nanosAsLong precedent in table()).
     if (
         spark.conf.get(
             "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
@@ -162,12 +167,13 @@ def eager_parallel(*builders):
     order; exceptions propagate. Only for builders with no data
     dependency on one another — a dependent pair must share a thread.
 
-    HARD CONTRACT (round-13 ADVICE): builders run concurrently against
-    the session-GLOBAL SQL conf, so no builder may reach a conf-scoping
-    section — connected_components on a graph over LOCAL_CC_MAX_EDGES
-    (its distributed rounds narrow spark.sql.shuffle.partitions and can
-    disable AQE mid-flight) or a streaming drain (state_partitions
-    override). A threaded builder that mutates session conf silently
+    HARD CONTRACT: builders run concurrently against the session-GLOBAL
+    SQL conf, so no builder may reach one of the two scoped conf
+    writers — streaming._drain (every streaming drain narrows
+    spark.sql.shuffle.partitions for its query start) and
+    dedup._distributed_labels (connected_components on a graph over
+    LOCAL_CC_MAX_EDGES narrows the width and can disable AQE
+    mid-flight). A threaded builder that mutates session conf silently
     re-plans its SIBLINGS at the narrowed width. Keep CC/streaming
     chains on the caller's thread."""
     if len(builders) == 1:
@@ -3443,23 +3449,14 @@ _STREAM_RUN_SEQ = itertools.count()
     " (bench best-of-2) do not collide.",
 )
 def q178(spark, sf_dir):
-    import shutil
-
     from smartbulkcopy_spark import streaming as _streaming
 
-    src = f"{sf_dir}/events.parquet"
-    feed = _streaming.streamable_events_dir(src)
-    try:
+    with _streaming.events_feed(f"{sf_dir}/events.parquet") as feed:
         return _streaming.run_hourly_seasonality(
             spark,
             feed,
             query_name=f"q178_seasonality_{next(_STREAM_RUN_SEQ)}",
         )
-    finally:
-        # only the symlink temp dir is ours to remove; a directory
-        # source streams in place and passes through unchanged
-        if feed != os.path.abspath(src):
-            shutil.rmtree(feed, ignore_errors=True)
 
 
 # ---------------------------------------------------------------------------
@@ -3492,21 +3489,14 @@ def q178(spark, sf_dir):
     " is one pass, state bounded by the live-user key space.",
 )
 def q182(spark, sf_dir):
-    import shutil
-
     from smartbulkcopy_spark import streaming as _streaming
 
-    src = f"{sf_dir}/events.parquet"
-    feed = _streaming.streamable_events_dir(src)
-    try:
+    with _streaming.events_feed(f"{sf_dir}/events.parquet") as feed:
         return _streaming.run_peak_concurrency(
             spark,
             feed,
             query_name=f"q182_peak_{next(_STREAM_RUN_SEQ)}",
         )
-    finally:
-        if feed != os.path.abspath(src):
-            shutil.rmtree(feed, ignore_errors=True)
 
 
 # ---------------------------------------------------------------------------
@@ -3533,21 +3523,14 @@ def q182(spark, sf_dir):
     " Memory-sink names sequence-unique; one availableNow pass.",
 )
 def q184(spark, sf_dir):
-    import shutil
-
     from smartbulkcopy_spark import streaming as _streaming
 
-    src = f"{sf_dir}/events.parquet"
-    feed = _streaming.streamable_events_dir(src)
-    try:
+    with _streaming.events_feed(f"{sf_dir}/events.parquet") as feed:
         return _streaming.run_session_funnel(
             spark,
             feed,
             query_name=f"q184_funnel_{next(_STREAM_RUN_SEQ)}",
         )
-    finally:
-        if feed != os.path.abspath(src):
-            shutil.rmtree(feed, ignore_errors=True)
 
 
 # ---------------------------------------------------------------------------
@@ -3579,22 +3562,16 @@ def q184(spark, sf_dir):
     " 2-hour eviction delay on both sides.",
 )
 def q198(spark, sf_dir):
-    import shutil
-
     from smartbulkcopy_spark import streaming as _streaming
 
     src = f"{sf_dir}/events.parquet"
-    feed = _streaming.streamable_events_dir(src)
-    try:
+    with _streaming.events_feed(src) as feed:
         return _streaming.run_click_attribution(
             spark,
             feed,
             query_name=f"q198_attrib_{next(_STREAM_RUN_SEQ)}",
             batch_src=src,
         )
-    finally:
-        if feed != os.path.abspath(src):
-            shutil.rmtree(feed, ignore_errors=True)
 
 
 # Phase-5 pipeline operators (q21+) register themselves on import. The

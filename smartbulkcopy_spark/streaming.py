@@ -15,39 +15,91 @@ a 100 TB event feed; nothing here is local-mode-specific.
 
 from __future__ import annotations
 
+import contextlib
+import os
+import shutil
+import tempfile
+
 import pandas as pd
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
-from smartbulkcopy_spark.queries import cents
+from smartbulkcopy_spark.queries import cents, events_ts_ntz
+
+# Shuffle width of every drain's stateful operator. Streaming state width
+# binds at query START, and each partition carries its own state store
+# plus a per-batch checkpoint fixed cost (a stream-stream join has FOUR
+# stores per partition per side: q198 measured 14 s at 32 partitions vs
+# 3.2 s at 4 for the same 40k state rows at sf0.1). In-flight state here
+# is small and keyed — a struct per live user, a counter per bounded
+# key, the rows inside a watermark horizon — so the width is sized to
+# that, never to the corpus. State is keyed, so the width cannot change
+# converged values.
+DRAIN_SHUFFLE_PARTITIONS = 8
 
 
-def streamable_events_dir(parquet_file: str) -> str:
-    """The file source requires a DIRECTORY; fixture tables are single
-    read-only files. Symlink the file into a temp dir (no data copy) —
-    the caller streams the dir and may remove it after the drain (a
-    memory sink holds its rows independently of the source). A path
-    that is already a directory (e.g. a Spark-written table) streams
-    as-is — returned unchanged, nothing to clean up."""
-    import os
-    import tempfile
+def _drain(
+    spark: SparkSession, df: DataFrame, query_name: str, output_mode: str
+) -> DataFrame:
+    """Run the streaming frame `df` once over everything its sources
+    hold (availableNow trigger) into the memory sink `query_name` and
+    return the sink's table. The only memory-sink start in the package.
 
-    if os.path.isdir(parquet_file):
-        return os.path.abspath(parquet_file)
-    d = tempfile.mkdtemp(prefix="sbc_stream_feed_")
-    os.symlink(
-        os.path.abspath(parquet_file),
-        os.path.join(d, os.path.basename(parquet_file)),
+    The session's shuffle width is narrowed to DRAIN_SHUFFLE_PARTITIONS
+    for the query's start and restored before returning, so any batch
+    assembly the caller runs on the result plans at session width. A
+    drain that fails or is interrupted mid-wait is stopped first: a
+    query left running keeps its sink name registered and poisons later
+    runs in a long-lived session (stop() on a finished query is a
+    no-op)."""
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set(
+        "spark.sql.shuffle.partitions", str(DRAIN_SHUFFLE_PARTITIONS)
     )
-    return d
+    q = None
+    try:
+        q = (
+            df.writeStream.format("memory")
+            .queryName(query_name)
+            .outputMode(output_mode)
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination()
+    finally:
+        if q is not None and q.isActive:
+            q.stop()
+        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    return spark.table(query_name)
+
+
+@contextlib.contextmanager
+def events_feed(path: str):
+    """Yield a directory the file source can stream `path` from. File
+    sources list a DIRECTORY, while fixture tables are single read-only
+    files: a file is symlinked into a temp dir (no data copy) that is
+    removed on exit — the memory sink holds its rows independently of
+    the source, so a drained result outlives the feed. A directory
+    (e.g. a Spark-written table) streams in place and is never
+    removed."""
+    if os.path.isdir(path):
+        yield os.path.abspath(path)
+        return
+    d = tempfile.mkdtemp(prefix="sbc_stream_feed_")
+    try:
+        os.symlink(
+            os.path.abspath(path), os.path.join(d, os.path.basename(path))
+        )
+        yield d
+    finally:
+        shutil.rmtree(d, ignore_errors=True)
 
 
 def read_events_stream(
     spark: SparkSession, path: str, max_files_per_trigger: int | None = None
 ) -> DataFrame:
     """Open a parquet event feed as a stream (`path` must be a
-    directory — see ``streamable_events_dir`` for single-file
-    fixtures).
+    directory — see ``events_feed`` for single-file fixtures).
 
     Watermarks require TIMESTAMP (an absolute instant), not TIMESTAMP_NTZ,
     so `ts` is rebuilt with ``timestamp_micros`` — a pure epoch
@@ -57,32 +109,22 @@ def read_events_stream(
     start back to a UTC-pinned NTZ, so the converged output is bit-equal
     to the batch q18 answer in ANY session timezone.
 
-    The nanosecond parquet arrives as one of two dtypes depending on the
-    Spark version: raw bigint nanos under the pre-4.1 legacy conf, or
-    TIMESTAMP_NTZ on Spark >= 4.1.2 (which reads parquet nanos natively
-    and ignores ``nanosAsLong``). Both rebuilds below are pure epoch
-    arithmetic (the NTZ one is the q45/q46 ``timestampdiff`` pattern)."""
-    if spark.conf.get("spark.sql.legacy.parquet.nanosAsLong", "false") != "true":
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    ``events_ts_ntz`` first brings nanosecond feeds to the same NTZ as
+    microsecond ones; the epoch offset is the q45/q46 ``timestampdiff``
+    pattern."""
     schema = spark.read.parquet(path).schema
     reader = spark.readStream.schema(schema)
     if max_files_per_trigger:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    df = reader.parquet(path)
-    dtype = dict(df.dtypes).get("ts")
-    if dtype == "bigint":
-        df = df.withColumn("ts", F.timestamp_micros(F.expr("ts DIV 1000")))
-    elif dtype == "timestamp_ntz":
-        df = df.withColumn(
-            "ts",
-            F.timestamp_micros(
-                F.expr(
-                    "timestampdiff(MICROSECOND,"
-                    " TIMESTAMP_NTZ'1970-01-01 00:00:00', ts)"
-                )
-            ),
-        )
-    return df
+    return events_ts_ntz(reader.parquet(path)).withColumn(
+        "ts",
+        F.timestamp_micros(
+            F.expr(
+                "timestampdiff(MICROSECOND,"
+                " TIMESTAMP_NTZ'1970-01-01 00:00:00', ts)"
+            )
+        ),
+    )
 
 
 def hourly_aggregate(stream: DataFrame, watermark: str = "2 hours") -> DataFrame:
@@ -191,22 +233,12 @@ def run_dedup(
     spark: SparkSession,
     path: str,
     query_name: str = "events_dedup",
-    watermark: str = "2 hours",
     max_files_per_trigger: int | None = None,
 ) -> DataFrame:
     """Drain `path` through the streaming dedup and return the emitted
     (append-mode) rows."""
     stream = read_events_stream(spark, path, max_files_per_trigger)
-    q = (
-        dedup_events(stream, watermark)
-        .writeStream.format("memory")
-        .queryName(query_name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(query_name)
+    return _drain(spark, dedup_events(stream), query_name, "append")
 
 
 def run_sessionization(
@@ -219,30 +251,19 @@ def run_sessionization(
     per-user counts (update mode: the memory sink keeps every emission;
     the last one per user is the converged value)."""
     stream = read_events_stream(spark, path, max_files_per_trigger)
-    q = (
-        sessionize(stream)
-        .writeStream.format("memory")
-        .queryName(query_name)
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    snap = _drain(spark, sessionize(stream), query_name, "update")
     # update mode appends one row per user per micro-batch; dedupe to the
     # final (max n_events) emission per user.
-    snap = spark.table(query_name)
-    latest = snap.groupBy("user_id").agg(
+    return snap.groupBy("user_id").agg(
         F.max("n_events").alias("n_events"),
         F.max("n_sessions").alias("n_sessions"),
     )
-    return latest
 
 
 def run_to_convergence(
     spark: SparkSession,
     path: str,
     query_name: str = "events_hourly",
-    watermark: str = "2 hours",
     max_files_per_trigger: int | None = None,
     output_mode: str = "complete",
 ) -> DataFrame:
@@ -251,16 +272,7 @@ def run_to_convergence(
     the batch q18 answer bit-for-bit; in `append` mode only watermark-
     finalized windows are emitted."""
     stream = read_events_stream(spark, path, max_files_per_trigger)
-    q = (
-        hourly_aggregate(stream, watermark)
-        .writeStream.format("memory")
-        .queryName(query_name)
-        .outputMode(output_mode)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(query_name)
+    return _drain(spark, hourly_aggregate(stream), query_name, output_mode)
 
 
 def enrich_stream(
@@ -299,9 +311,7 @@ def run_enrichment(
     bit-for-bit."""
     from smartbulkcopy_spark.queries import table as _table
 
-    source = events_path or f"{sf_dir}/events.parquet"
-    feed = streamable_events_dir(source)
-    try:
+    with events_feed(events_path or f"{sf_dir}/events.parquet") as feed:
         stream = read_events_stream(spark, feed, max_files_per_trigger)
         cust = _table(spark, sf_dir, "customer").select(
             "c_custkey", "c_nationkey"
@@ -309,28 +319,9 @@ def run_enrichment(
         nat = _table(spark, sf_dir, "nation").select(
             "n_nationkey", "n_name"
         )
-        q = (
-            enrich_stream(stream, cust, nat)
-            .writeStream.format("memory")
-            .queryName(query_name)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
+        return _drain(
+            spark, enrich_stream(stream, cust, nat), query_name, "complete"
         )
-        q.awaitTermination()
-        return spark.table(query_name)
-    finally:
-        # streamable_events_dir mkdtemps a symlink dir for single-file
-        # fixtures (pass-through for real directories). Creator cleans:
-        # remove the dir ONLY when this call created it (feed differs
-        # from the caller's path) — a caller-provided feed dir, even
-        # one built by streamable_events_dir earlier, is caller-owned
-        # (the q182/q184 idiom).
-        import os
-        import shutil
-
-        if feed != os.path.abspath(source):
-            shutil.rmtree(feed, ignore_errors=True)
 
 
 # ---------------------------------------------------------------------------
@@ -417,52 +408,15 @@ def run_peak_concurrency(
     path: str,
     query_name: str = "peak_conc",
     max_files_per_trigger: int | None = None,
-    state_partitions: int | None = 8,
 ) -> DataFrame:
     """Drain `path` through the stateful interval tracker and return the
     converged (n_sessions, peak_concurrency, peak_at_us) row — must be
-    bit-equal to batch q172 when chunks arrive in time order.
-
-    state_partitions: scoped shuffle-partition override for the DRAIN —
-    the q198 rule (round 13: applied to every stateful drain).
-    Streaming state width binds at query START, each partition carries
-    its own state store + per-batch checkpoint fixed cost, and the
-    in-flight state here is one small struct per user inside the
-    session-gap horizon — never the corpus. Size to that;
-    None keeps the session default (a deployment with deep state wants
-    width). Restored before the batch assembly below, which runs at
-    session width. Partitioning cannot change the converged values
-    (state is keyed per user)."""
+    bit-equal to batch q172 when chunks arrive in time order."""
     from smartbulkcopy_spark.queries import peak_from_intervals
 
-    if state_partitions is not None:
-        _prev_sp = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set(
-            "spark.sql.shuffle.partitions", str(state_partitions)
-        )
-    q = None
-    try:
-        stream = read_events_stream(spark, path, max_files_per_trigger)
-        q = (
-            session_intervals(stream)
-            .writeStream.format("memory")
-            .queryName(query_name)
-            .outputMode("update")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        # A drain that dies mid-awaitTermination must not leave the
-        # query running — stop it before restoring the session width
-        # (the run_click_attribution pattern; stop() on a terminated
-        # query is a no-op).
-        if q is not None and q.isActive:
-            q.stop()
-        if state_partitions is not None:
-            spark.conf.set("spark.sql.shuffle.partitions", _prev_sp)
+    stream = read_events_stream(spark, path, max_files_per_trigger)
     iv = (
-        spark.table(query_name)
+        _drain(spark, session_intervals(stream), query_name, "update")
         .groupBy("user_id", "sid")
         .agg(F.min("st").alias("st"), F.max("en").alias("en"))
     )
@@ -565,44 +519,18 @@ def run_session_funnel(
     path: str,
     query_name: str = "sess_funnel",
     max_files_per_trigger: int | None = None,
-    state_partitions: int | None = 8,
 ) -> DataFrame:
     """Drain `path` through the stateful funnel tracker and return the
     converged (funnel_stage, n_sessions) rollup — must be bit-equal to
-    batch q153 when chunks arrive in time order.
-
-    state_partitions: the q198/q182 scoped drain width — state here is
-    six longs per user inside the session-gap horizon (see
-    run_peak_concurrency). Restored before the batch assembly."""
+    batch q153 when chunks arrive in time order."""
     from smartbulkcopy_spark.queries import (
         _FUNNEL_STAGE_SQL,
         _FUNNEL_STAGES,
     )
 
-    if state_partitions is not None:
-        _prev_sp = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set(
-            "spark.sql.shuffle.partitions", str(state_partitions)
-        )
-    q = None
-    try:
-        stream = read_events_stream(spark, path, max_files_per_trigger)
-        q = (
-            session_funnel_stages(stream)
-            .writeStream.format("memory")
-            .queryName(query_name)
-            .outputMode("update")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        if q is not None and q.isActive:
-            q.stop()
-        if state_partitions is not None:
-            spark.conf.set("spark.sql.shuffle.partitions", _prev_sp)
+    stream = read_events_stream(spark, path, max_files_per_trigger)
     conv = (
-        spark.table(query_name)
+        _drain(spark, session_funnel_stages(stream), query_name, "update")
         .groupBy("user_id", "sid")
         .agg(
             *[
@@ -659,39 +587,13 @@ def run_hourly_seasonality(
     path: str,
     query_name: str = "hourly_seasonality",
     max_files_per_trigger: int | None = None,
-    state_partitions: int | None = 8,
 ) -> DataFrame:
     """Drain `path` through the seasonality aggregation and return the
-    converged profile — must be bit-equal to batch q157.
-
-    state_partitions: the q198/q182 scoped drain width — complete-mode
-    aggregation state here is one counter per (event_type, hour), a
-    key space bounded by 24 x types, yet every shuffle partition
-    instantiates its own state store + per-batch checkpoint (see
-    run_peak_concurrency). Restored before the share_ppm assembly."""
-    if state_partitions is not None:
-        _prev_sp = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set(
-            "spark.sql.shuffle.partitions", str(state_partitions)
-        )
-    q = None
-    try:
-        stream = read_events_stream(spark, path, max_files_per_trigger)
-        q = (
-            hourly_seasonality_stream(stream)
-            .writeStream.format("memory")
-            .queryName(query_name)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        if q is not None and q.isActive:
-            q.stop()
-        if state_partitions is not None:
-            spark.conf.set("spark.sql.shuffle.partitions", _prev_sp)
-    h = spark.table(query_name)
+    converged profile — must be bit-equal to batch q157."""
+    stream = read_events_stream(spark, path, max_files_per_trigger)
+    h = _drain(
+        spark, hourly_seasonality_stream(stream), query_name, "complete"
+    )
     return h.select(
         "event_type",
         "hod",
@@ -776,7 +678,6 @@ def run_click_attribution(
     query_name: str = "click_attrib",
     max_files_per_trigger: int | None = None,
     batch_src: str | None = None,
-    state_partitions: int | None = 8,
 ) -> DataFrame:
     """Drain the feed through the stream-stream interval join and
     assemble q95's exact answer: per ERROR event (batch-read from
@@ -784,54 +685,18 @@ def run_click_attribution(
     LEFT JOIN is not a streaming concern), the count of matched clicks.
     Bit-equal to batch q95 on any feed whose disorder stays inside the
     watermark delay. Pass the durable events parquet as `batch_src`
-    when the feed is a temp symlink dir removed before the result is
-    consumed (the q182 cleanup pattern — only the memory sink must
-    outlive the drain).
-
-    state_partitions: scoped shuffle-partition override for the DRAIN
-    (stream-stream join state instantiates FOUR state stores per
-    partition per side, and the per-store checkpoint fixed cost
-    dominates when state is small: measured 14 s at 32 partitions vs
-    3.2 s at 4 for the same 40 k state rows at sf0.1). Streaming state
-    width binds at query START and is independent of the session's
-    batch width; size it to the expected in-flight state volume — the
-    rows inside the watermark horizon — not the corpus. None keeps the
-    session default (a real deployment with deep state wants width).
-    Restored before the batch assembly, which runs at session width."""
-    if state_partitions is not None:
-        _prev_sp = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set(
-            "spark.sql.shuffle.partitions", str(state_partitions)
-        )
-    q = None
-    try:
-        errs = read_events_stream(spark, path, max_files_per_trigger).where(
-            F.col("event_type") == "error"
-        )
-        clks = read_events_stream(spark, path, max_files_per_trigger).where(
-            F.col("event_type") == "click"
-        )
-        q = (
-            click_attribution_join(errs, clks)
-            .writeStream.format("memory")
-            .queryName(query_name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        # A drain that dies mid-awaitTermination must not leave the
-        # query running (it would keep the memory-sink name registered
-        # and poison later runs in a long-lived session) — stop it
-        # before restoring the session's shuffle width (round-13
-        # ADVICE). stop() on an already-terminated query is a no-op.
-        if q is not None and q.isActive:
-            q.stop()
-        if state_partitions is not None:
-            spark.conf.set("spark.sql.shuffle.partitions", _prev_sp)
-    m = spark.table(query_name).groupBy("event_id").agg(
-        F.count("*").alias("n")
+    when the feed is an ``events_feed`` temp dir removed before the
+    result is consumed (only the memory sink outlives the drain)."""
+    errs = read_events_stream(spark, path, max_files_per_trigger).where(
+        F.col("event_type") == "error"
+    )
+    clks = read_events_stream(spark, path, max_files_per_trigger).where(
+        F.col("event_type") == "click"
+    )
+    m = (
+        _drain(spark, click_attribution_join(errs, clks), query_name, "append")
+        .groupBy("event_id")
+        .agg(F.count("*").alias("n"))
     )
     err = (
         spark.read.parquet(batch_src or path)

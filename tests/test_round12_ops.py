@@ -62,20 +62,35 @@ def test_cc_shuffle_partitions_scoped_and_restored(spark, monkeypatch):
     """connected_components leaves the session's shuffle width and AQE
     flag as it found them on both branches (the distributed one scopes
     its own width for its rounds), and the labels it returns are
-    already materialized, so later consumption re-plans nothing."""
+    already materialized, so later consumption re-plans nothing.
+
+    The distributed branch is also pinned by its job count, a counter
+    load cannot move: 9 jobs on this graph. Deleting the scoping and
+    leaving AQE on at session width took it to 13, and an explicit
+    repartition before each join/groupBy to 17 (same labels)."""
     from smartbulkcopy_spark.pipeline import dedup
     from smartbulkcopy_spark.pipeline.dedup import connected_components
 
+    sc = spark.sparkContext
     before = [spark.conf.get(k) for k in _CC_CONFS]
     pairs = spark.createDataFrame(
         [(1, 2), (2, 3), (10, 11)], ["a_id", "b_id"]
     )
     for limit in (dedup.LOCAL_CC_MAX_EDGES, 0):  # driver, distributed
         monkeypatch.setattr(dedup, "LOCAL_CC_MAX_EDGES", limit)
-        labels = connected_components(spark, pairs)
+        group = f"test-cc-scoped-jobs-{limit}"
+        sc.setJobGroup(group, "CC job count")
+        try:
+            labels = connected_components(spark, pairs)
+            jobs = sc.statusTracker().getJobIdsForGroup(group)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
         assert [spark.conf.get(k) for k in _CC_CONFS] == before
         got = {(r["node"], r["lbl"]) for r in labels.collect()}
         assert got == {(1, 1), (2, 1), (3, 1), (10, 10), (11, 10)}
+        if limit == 0:
+            assert len(jobs) <= 9, sorted(jobs)
 
 
 def test_fused_parity_cc_matches_per_graph_cc(spark, monkeypatch):

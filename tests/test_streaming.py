@@ -95,7 +95,6 @@ def test_streaming_multi_file_append_respects_watermark(
         str(d),
         query_name="append_test",
         output_mode="append",
-        watermark="2 hours",
         max_files_per_trigger=1,
     )
     emitted = {
@@ -406,15 +405,22 @@ def test_stateful_trackers_reject_out_of_order_feed(
     src.where(F.col("ts") < mid).coalesce(1).write.mode(
         "append"
     ).parquet(str(d))
+    # Both trackers fail inside the shared drain, which must stop the
+    # query and put the session's shuffle width back on the way out.
+    width = spark.conf.get("spark.sql.shuffle.partitions")
     with pytest.raises(Exception, match="out-of-order event feed"):
         streaming.run_peak_concurrency(
             spark, str(d), query_name="peak_ooo", max_files_per_trigger=1
         ).collect()
+    assert spark.streams.active == []
+    assert spark.conf.get("spark.sql.shuffle.partitions") == width
     with pytest.raises(Exception, match="out-of-order event feed"):
         streaming.run_session_funnel(
             spark, str(d), query_name="funnel_ooo",
             max_files_per_trigger=1,
         ).collect()
+    assert spark.streams.active == []
+    assert spark.conf.get("spark.sql.shuffle.partitions") == width
 
 
 def test_streaming_seasonality_converges_to_batch(
