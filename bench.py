@@ -1,7 +1,15 @@
 """Benchmark harness: runs every registered query at $SPARK_GRAFT_SF_DIR
 (default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints ONE
 JSON line: {"metric": ..., "value": total_sec, "unit": "sec",
-"queries": {name: sec}, "sf": ...}.
+"queries": {name: sec}, "sf": ...}, and writes BENCH_DETAIL.json with each
+query's record (`query_record`: build/exec split, jobs, stages, shuffle and
+spill bytes, compiles, plan node counts) under "profile".
+
+    python bench.py                                   # sweep + copy layouts
+    python bench.py q69_dedup_clusters q141_pq_code_assignment
+
+With query names it runs only those queries and prints {name: record} as
+one JSON line instead (no copy benchmarks, no BENCH_DETAIL.json).
 
 Each query is forced to full execution with the noop sink so timings measure
 the whole plan (scan -> shuffle -> agg) without collect/driver transfer.
@@ -338,7 +346,7 @@ def emit_payloads(
     copies: dict[str, object],
     sf: float,
     idle: bool | None = None,
-    compiles: dict[str, int] | None = None,
+    profile: dict[str, dict] | None = None,
 ) -> tuple[str, dict[str, object]]:
     """Build (compact-stdout-line, full-detail-dict). The compact line's
     query keys are the qNN prefixes (unique by construction — asserted),
@@ -449,8 +457,8 @@ def emit_payloads(
         "queries": dict(sorted(timings.items())),
         "copy": copies,
         "sf": sf,
-        # codegen classes compiled during each query's kept run
-        "compiles": dict(sorted((compiles or {}).items())),
+        # each query's record of its kept run (query_record)
+        "profile": dict(sorted((profile or {}).items())),
         "key_map": {
             "queries": "stdout line packs timings as a dense array:"
             " queries.t[i] = timing of query number queries.q1st + i"
@@ -479,49 +487,104 @@ def machine_state() -> dict[str, object]:
     return state
 
 
-def main() -> None:
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    m = re.search(r"sf([0-9.]+)", sf_dir)
-    sf = float(m.group(1)) if m else -1.0
-    machine = machine_state()
+# Plan nodes counted in each query's record, by the node name that opens
+# a line of the physical plan's tree string (exact names: "Sort" is not
+# "SortMergeJoin").
+PLAN_NODES = {
+    "exchange": ("Exchange", "BroadcastExchange"),
+    "reused_exchange": ("ReusedExchange",),
+    "sort": ("Sort",),
+    "window": ("Window",),
+    "file_scan": ("FileScan",),
+    "in_memory_scan": ("InMemoryTableScan",),
+}
 
-    from smartbulkcopy_spark.queries import REGISTRY
-    from smartbulkcopy_spark.session import get_spark
 
-    spark = get_spark(app_name="sbc-bench")
-    spark.sparkContext.setLogLevel("ERROR")
+def plan_counts(plan: str) -> dict[str, int]:
+    """PLAN_NODES counts of a physical plan's tree string."""
+    names = [
+        m.group(1)
+        for ln in plan.splitlines()
+        if (m := re.match(r"[\s:+|-]*(?:\*\(\d+\) )?(\w+)", ln))
+    ]
+    return {
+        key: sum(names.count(n) for n in nodes)
+        for key, nodes in PLAN_NODES.items()
+    }
 
-    # Warm the JVM + parquet footer caches so per-query numbers measure the
-    # steady-state plan, not first-touch classloading or file listing —
-    # without this, whichever query alphabetically first touches each
-    # table absorbs its first-touch cost (q21 was charged documents').
-    for t in ("lineitem", "orders", "events", "documents", "embeddings"):
-        run_one(spark.read.parquet(os.path.join(sf_dir, f"{t}.parquet")).limit(1))
-    # ...and the Python worker pool + Arrow serializer, so the mapInPandas
-    # query measures compute rather than one-time worker spin-up.
-    run_one(
-        spark.range(1).mapInPandas(
-            lambda it: it, "id long"
-        )
-    )
 
-    # Best-of-2 per query: the first execution of a plan pays Janino
-    # compiles of its generated classes + JIT (measured 9s vs 1.2s warm
-    # on the minhash pipeline), which made per-round comparisons mostly
-    # machine noise. The second run skips the compiles only while the
-    # query's distinct classes fit Spark's codegen cache: under the
-    # default 100-entry cap a query with more classes recompiled all of
-    # them on EVERY run (get_spark sizes the cache; compiles[name] below
-    # records the count, so a query that outgrows it shows). The min of
-    # two runs then reports the steady-state plan cost — the number that
-    # actually tracks plan regressions.
+def query_record(spark, fn, sf_dir: str) -> dict[str, object]:
+    """Build and run one query (`fn(spark, sf_dir)`) and return its record.
+
+    The timed window holds only the build and the noop run, split by one
+    clock read: `build_s` + `exec_s`. Everything else is read after the
+    clock stops: the codegen classes compiled, the jobs launched since
+    the window opened and their run (non-skipped) stages from the status
+    store, and the node counts of the query's own executed plan, whose
+    planning and printing take `plan_s`. No job group is set: threads
+    that `eager_parallel` starts would not inherit it, so the record
+    counts every job the process launched in the window. Then every
+    eager() intermediate is released and the cache emptied, so runs
+    stay independent and no Dataset outlives its run."""
+    from perfbench.tracing import StatusReader
+    from smartbulkcopy_spark.queries import release_caches
+
     compile_count = (
         spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
         .METRIC_COMPILATION_TIME().getCount
     )
-    timings: dict[str, float] = {}
-    compiles: dict[str, int] = {}
-    for qi, (name, spec) in enumerate(sorted(REGISTRY.items())):
+    status = StatusReader(spark)
+    status.mark()
+    c0 = compile_count()
+    t0 = time.perf_counter()
+    df = fn(spark, sf_dir)
+    t1 = time.perf_counter()
+    run_one(df)
+    t2 = time.perf_counter()
+    compiles = compile_count() - c0
+    jobs = status.new_jobs()
+    stages = status.stages(s for j in jobs for s in j["stages"]).values()
+    t3 = time.perf_counter()
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    plan_s = time.perf_counter() - t3
+    release_caches()
+    spark.catalog.clearCache()
+
+    def total(key: str) -> int:
+        return sum(s[key] for s in stages)
+
+    return {
+        "build_s": round(t1 - t0, 4),
+        "exec_s": round(t2 - t1, 4),
+        "compiles": compiles,
+        "jobs": len(jobs),
+        "stages": len(stages),
+        "tasks": total("tasks"),
+        "input_records": total("input_records"),
+        "shuffle_write_bytes": total("shuffle_write_bytes"),
+        "spill_bytes": total("spill_bytes"),
+        "plan_s": round(plan_s, 4),
+        "plan": plan_counts(plan),
+    }
+
+
+def profile_queries(spark, sf_dir: str, names) -> dict[str, dict]:
+    """{name: record} of the kept run of each query in `names`, in order.
+
+    Best-of-2 per query: the first execution of a plan pays Janino
+    compiles of its generated classes + JIT (measured 9s vs 1.2s warm on
+    the minhash pipeline), which made per-round comparisons mostly
+    machine noise. The second run skips the compiles only while the
+    query's distinct classes fit Spark's codegen cache: under the default
+    100-entry cap a query with more classes recompiled all of them on
+    EVERY run (get_spark sizes the cache; the record's `compiles` counts
+    them, so a query that outgrows it shows). The faster run then reports
+    the steady-state plan cost — the number that actually tracks plan
+    regressions — and its record is the one kept."""
+    from smartbulkcopy_spark.queries import REGISTRY
+
+    out: dict[str, dict] = {}
+    for qi, name in enumerate(names):
         if qi % 4 == 3:
             # Periodic JVM GC nudge: a long single-session sweep over a
             # 170+-query registry accumulates heap pressure that taxed
@@ -541,31 +604,69 @@ def main() -> None:
             # UNIFORMLY and reruns worsen it, stop re-timing and let
             # the machine cool instead. Outside the timed window.
             spark.sparkContext._jvm.System.gc()
-        runs: list[tuple[float, int]] = []
+        runs: list[float] = []
+        recs: list[dict] = []
         # Two runs normally; a third ONLY when the first two disagree by
         # >1.5x — that disagreement means one of them caught a JIT/GC
         # hiccup (round 6 recorded q63 at 7.9s this way; steady-state is
         # 2.3s), and a single tiebreak run bounds the extra cost to the
         # noisy queries instead of 1.5x-ing the whole bench.
         while len(runs) < 2 or (
-            len(runs) == 2 and max(runs)[0] > 1.5 * min(runs)[0]
+            len(runs) == 2 and max(runs) > 1.5 * min(runs)
         ):
-            c0 = compile_count()
-            t0 = time.perf_counter()
-            run_one(spec.fn(spark, sf_dir))
-            runs.append((time.perf_counter() - t0, compile_count() - c0))
-            # LSH queries persist their signature tables (both self-join
-            # sides read them); drop them between runs so timings stay
-            # independent and storage doesn't accumulate dead cache.
-            spark.catalog.clearCache()
-        best, compiles[name] = min(runs)
-        timings[name] = round(best, 4)
+            recs.append(query_record(spark, REGISTRY[name].fn, sf_dir))
+            runs.append(recs[-1]["build_s"] + recs[-1]["exec_s"])
+        out[name] = recs[runs.index(min(runs))]
+    return out
+
+
+def main(names: list[str]) -> None:
+    """Without `names`: the full sweep plus the copy benchmarks; prints the
+    compact line and writes BENCH_DETAIL.json. With query names: only
+    those queries (same warm-up and best-of-2), printed as one JSON line
+    `{name: record}`; no copy benchmarks, no BENCH_DETAIL.json."""
+    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    m = re.search(r"sf([0-9.]+)", sf_dir)
+    sf = float(m.group(1)) if m else -1.0
+    machine = machine_state()
+
+    from smartbulkcopy_spark.queries import REGISTRY
+    from smartbulkcopy_spark.session import get_spark
+
+    unknown = sorted(set(names) - set(REGISTRY))
+    if unknown:
+        sys.exit(f"unknown queries: {unknown}")
+
+    spark = get_spark(app_name="sbc-bench")
+    spark.sparkContext.setLogLevel("ERROR")
+
+    # Warm the JVM + parquet footer caches so per-query numbers measure the
+    # steady-state plan, not first-touch classloading or file listing —
+    # without this, whichever query alphabetically first touches each
+    # table absorbs its first-touch cost (q21 was charged documents').
+    for t in ("lineitem", "orders", "events", "documents", "embeddings"):
+        run_one(spark.read.parquet(os.path.join(sf_dir, f"{t}.parquet")).limit(1))
+    # ...and the Python worker pool + Arrow serializer, so the mapInPandas
+    # query measures compute rather than one-time worker spin-up.
+    run_one(
+        spark.range(1).mapInPandas(
+            lambda it: it, "id long"
+        )
+    )
+
+    profile = profile_queries(spark, sf_dir, names or sorted(REGISTRY))
+    if names:
+        print(json.dumps(profile, separators=(",", ":")))
+        return
+    timings = {
+        n: round(r["build_s"] + r["exec_s"], 4) for n, r in profile.items()
+    }
 
     copies = copy_benchmarks(spark, sf_dir)
 
     line, detail = emit_payloads(
         timings, copies, sf, idle=machine.get("idle_at_start"),
-        compiles=compiles,
+        profile=profile,
     )
     try:
         machine["loadavg_at_end"] = [round(v, 2) for v in os.getloadavg()]
@@ -577,4 +678,4 @@ def main() -> None:
 
 
 if __name__ == "__main__":
-    main()
+    main(sys.argv[1:])

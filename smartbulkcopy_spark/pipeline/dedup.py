@@ -244,24 +244,9 @@ def signatures(spark, sf_dir, member_ids=None):
     base = _normed(spark, sf_dir)
     if member_ids is not None:
         base = base.join(member_ids, "doc_id", "left_semi")
-    shingles = base.select(
-        "doc_id", F.explode(F.expr(SHINGLES_SPARK)).alias("sh")
-    )
-    hashed = shingles.select(
-        "doc_id",
-        F.md5(F.concat(F.lit("0:"), F.col("sh"))).alias("h0"),
-        F.md5(F.concat(F.lit("1:"), F.col("sh"))).alias("h1"),
-    )
-    return hashed.groupBy("doc_id").agg(
-        *[
-            F.min(
-                F.expr(
-                    f"CAST(conv(substr(h{k // 4}, {1 + 8 * (k % 4)}, 8),"
-                    " 16, 10) AS BIGINT)"
-                )
-            ).alias(f"mh{k}")
-            for k in range(K_HASHES)
-        ]
+    return _minhash_minima(
+        base.select("doc_id", F.explode(F.expr(SHINGLES_SPARK)).alias("sh")),
+        "sh",
     )
 
 
@@ -271,12 +256,19 @@ def _signatures_from_shingle_sets(sh):
     path: MinHash minima are duplicate-insensitive, so minima over the
     verify stage's distinct shingle sets are IDENTICAL to `signatures`'
     minima over the raw shingle stream, for free from the cached sh."""
-    hashed = sh.select(
-        "doc_id", F.explode("s").alias("shg")
-    ).select(
+    return _minhash_minima(
+        sh.select("doc_id", F.explode("s").alias("shg")), "shg"
+    )
+
+
+def _minhash_minima(shingles, col):
+    """(doc_id, mh0..mh7) of a (doc_id, ``col``) shingle stream: two md5
+    digests per shingle, each cut into four 8-hex-digit slices, and the
+    per-doc MIN of every slice parsed as a BIGINT."""
+    hashed = shingles.select(
         "doc_id",
-        F.md5(F.concat(F.lit("0:"), F.col("shg"))).alias("h0"),
-        F.md5(F.concat(F.lit("1:"), F.col("shg"))).alias("h1"),
+        F.md5(F.concat(F.lit("0:"), F.col(col))).alias("h0"),
+        F.md5(F.concat(F.lit("1:"), F.col(col))).alias("h1"),
     )
     return hashed.groupBy("doc_id").agg(
         *[
@@ -1179,14 +1171,12 @@ class _ReliableRounds:
         self._prev = None
 
 
-def _round_truncator(spark, reliable):
-    """Pick the per-round lineage truncation: reliable=None (auto) uses
-    the fault-tolerant parquet rounds iff the session has a checkpoint
-    dir configured, else localCheckpoint(). Both are eager, so each
-    round's plan is computed exactly once."""
-    if reliable is None:
-        reliable = spark.sparkContext.getCheckpointDir() is not None
-    if reliable:
+def _round_truncator(spark):
+    """Pick the per-round lineage truncation: the fault-tolerant parquet
+    rounds iff the session has a checkpoint dir configured, else
+    localCheckpoint(). Both are eager, so each round's plan is computed
+    exactly once."""
+    if spark.sparkContext.getCheckpointDir() is not None:
         return _ReliableRounds(spark)
 
     def _local(df):
@@ -1196,7 +1186,7 @@ def _round_truncator(spark, reliable):
     return _local
 
 
-def connected_components(spark, pair_df, reliable=None, budget=None):
+def connected_components(spark, pair_df):
     """Label every node of an undirected edge list with its component's
     minimum id.
 
@@ -1214,15 +1204,15 @@ def connected_components(spark, pair_df, reliable=None, budget=None):
       labels them (_driver_labels). No rounds, no checkpoints, no conf
       change, and no Spark job besides the collect.
     - larger graphs: distributed hash-min label propagation with a
-      pointer-doubling fallback (_distributed_labels); ``budget`` and
-      ``reliable`` apply to this branch only.
+      pointer-doubling fallback (_distributed_labels).
 
-    budget: hash-min propagate steps before switching to the doubling
-    phase (default MAX_CC_ROUNDS). Hash-min converges in O(diameter)
-    steps — right for the shallow components dedup graphs produce; a
-    corpus of chained boilerplate can exceed any fixed budget, so past
-    it each step additionally shortcuts lbl(v) <- lbl(lbl(v)) (pointer
-    doubling, one extra id-keyed self-join per step), which halves
+    The distributed branch runs MAX_CC_ROUNDS hash-min propagate steps
+    before switching to the doubling phase. Hash-min converges in
+    O(diameter) steps — right for the shallow components dedup graphs
+    produce; a corpus of chained boilerplate can exceed any fixed
+    budget, so past it each step additionally shortcuts lbl(v) <-
+    lbl(lbl(v)) (pointer doubling, one extra id-keyed self-join per
+    step), which halves
     remaining path lengths and settles ANY diameter in O(log d) extra
     steps. Convergence is still certified by a full propagate step
     reporting zero changes, so the exit state is a hash-min fixpoint
@@ -1234,10 +1224,10 @@ def connected_components(spark, pair_df, reliable=None, budget=None):
     changes in the LAST unrolled step still certifies the fixpoint,
     because propagate is deterministic: unchanged output means the
     step's input already was the fixpoint).
-    reliable: force fault-tolerant parquet rounds (True),
-    localCheckpoint() (False), or auto-detect from the session's
-    checkpoint dir (None). The reliable path deletes each superseded
-    round's file as the next materializes (see _ReliableRounds).
+    Rounds are fault-tolerant parquet files when the session has a
+    checkpoint dir, localCheckpoint() otherwise; the parquet path
+    deletes each superseded round's file as the next materializes (see
+    _ReliableRounds).
 
     The distributed iteration runs at a SCALE-ADAPTIVE shuffle width
     derived from the edge count (guide §2: the label table is <= 2 x
@@ -1256,9 +1246,8 @@ def connected_components(spark, pair_df, reliable=None, budget=None):
     edges = pair_df.select("a_id", "b_id").where(
         F.col("a_id").isNotNull() & F.col("b_id").isNotNull()
     )
-    sym = edges.select(
-        F.col("a_id").alias("u"), F.col("b_id").alias("v")
-    ).union(edges.select(F.col("b_id").alias("u"), F.col("a_id").alias("v")))
+    # Persisted for the distributed branch, which reads the edges again
+    # in every round.
     edges = edges.persist()
     # Both branches return frames that no longer read the edge cache:
     # driver labels are Arrow-built, distributed ones checkpointed.
@@ -1271,19 +1260,21 @@ def connected_components(spark, pair_df, reliable=None, budget=None):
         # cache stage plus two aggregation stages.)
         head = edges.limit(LOCAL_CC_MAX_EDGES + 1).toArrow()
         if head.num_rows <= LOCAL_CC_MAX_EDGES:
-            return _driver_labels(spark, head, sym.schema["u"].dataType)
-        return _distributed_labels(
-            spark, sym, edges.count(), reliable, budget
-        )
+            return _driver_labels(spark, head, edges.schema["a_id"].dataType)
+        return _distributed_labels(spark, edges, edges.count())
     finally:
         edges.unpersist()
 
 
-def _distributed_labels(spark, sym, n_edges, reliable, budget):
-    """Hash-min label propagation over the symmetric edge list ``sym``
-    (u, v), with the pointer-doubling fallback; see
-    connected_components for the round structure and conf scoping."""
-    trunc = _round_truncator(spark, reliable)
+def _distributed_labels(spark, edges, n_edges):
+    """Hash-min label propagation over the (a_id, b_id) ``edges``, read
+    as the symmetric edge list ``sym`` (u, v), with the pointer-doubling
+    fallback; see connected_components for the round structure and conf
+    scoping."""
+    sym = edges.select(
+        F.col("a_id").alias("u"), F.col("b_id").alias("v")
+    ).union(edges.select(F.col("b_id").alias("u"), F.col("a_id").alias("v")))
+    trunc = _round_truncator(spark)
     _sess_sp = spark.conf.get("spark.sql.shuffle.partitions")
     width = min(
         int(_sess_sp), max(4, -(-2 * n_edges // CC_ROWS_PER_PARTITION))
@@ -1305,8 +1296,7 @@ def _distributed_labels(spark, sym, n_edges, reliable, budget):
                 F.least(F.col("u"), F.col("mn")).alias("lbl"),
             )
         )
-        if budget is None:
-            budget = MAX_CC_ROUNDS
+        budget = MAX_CC_ROUNDS
         # Doubling steps halve the longest remaining chain, so 64 more
         # steps settle any graph addressable by 64-bit ids. Each outer
         # iteration checkpoints once and runs CC_UNROLL propagate steps
@@ -1436,16 +1426,16 @@ def _driver_labels(spark, tbl, id_type):
     )
 
 
-def dedup_clusters(spark, sf_dir, pairs=None, reliable=None):
+def dedup_clusters(spark, sf_dir, pairs=None):
     """(doc_id, cluster_rep) for every document in >=1 verified near-dup
     pair; cluster_rep = min doc_id of its connected component.
 
     pairs: optional precomputed verified-pair DataFrame (a_id, b_id) —
-    see `verified_pairs`. reliable: see `connected_components`.
+    see `verified_pairs`.
     """
     if pairs is None:
         pairs = verified_pairs(spark, sf_dir)
-    labels = connected_components(spark, pairs, reliable=reliable)
+    labels = connected_components(spark, pairs)
     return labels.select(
         F.col("node").alias("doc_id"), F.col("lbl").alias("cluster_rep")
     ).orderBy("doc_id")

@@ -34,7 +34,6 @@ CODEGEN_CACHE_ENTRIES = 1000
 def get_spark(
     app_name: str = "smartbulkcopy-spark",
     cpus: int | str | None = None,
-    shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     """Build (or fetch) a SparkSession tuned for this engine.
@@ -49,7 +48,7 @@ def get_spark(
     entries; it cannot be raised at runtime.
     """
     cpus = str(cpus or os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    shuffle = str(shuffle_partitions or max(int(cpus), 32))
+    shuffle = str(max(int(cpus), 32))
 
     builder = SparkSession.builder.appName(app_name)
     # Respect a master configured via spark-submit / spark-defaults / env —
@@ -95,26 +94,3 @@ def get_spark(
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
-
-
-def load_tables(spark: SparkSession, sf_dir: str, names: tuple[str, ...] | None = None):
-    """Register the synthetic test tables (TESTDATA.md) as temp views and
-    return them as a dict of DataFrames."""
-    all_names = (
-        "region",
-        "nation",
-        "customer",
-        "supplier",
-        "part",
-        "orders",
-        "lineitem",
-        "events",
-        "documents",
-        "embeddings",
-    )
-    out = {}
-    for name in names or all_names:
-        df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
-        df.createOrReplaceTempView(name)
-        out[name] = df
-    return out

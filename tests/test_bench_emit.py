@@ -130,13 +130,44 @@ def test_detail_keeps_full_names_and_note():
 
 
 def test_compile_counts_go_to_detail_only():
-    """Per-query codegen compile counts are detail-file data under full
-    names; the stdout line is byte-identical with or without them."""
+    """Per-query records (codegen compile counts among them) are
+    detail-file data under full names; the stdout line is byte-identical
+    with or without them."""
     timings, copies = worst_case_payloads()
-    compiles = {name: 140 for name in REGISTRY}
-    line, detail = bench.emit_payloads(timings, copies, 0.1, compiles=compiles)
+    profile = {name: {"compiles": 140, "jobs": 3} for name in REGISTRY}
+    line, detail = bench.emit_payloads(timings, copies, 0.1, profile=profile)
     assert line == bench.emit_payloads(timings, copies, 0.1)[0]
-    assert detail["compiles"] == compiles
+    assert {n: r["compiles"] for n, r in detail["profile"].items()} == {
+        name: 140 for name in REGISTRY
+    }
+
+
+def test_profile_record_schema(spark, sf_dir):
+    """One run of q69 through bench's record function: the record's keys
+    and types are pinned, it saw q69's jobs and exchanges, and no eager()
+    intermediate outlives the run."""
+    from smartbulkcopy_spark import queries
+
+    rec = bench.query_record(
+        spark, REGISTRY["q69_dedup_clusters"].fn, sf_dir
+    )
+    assert list(rec) == [
+        "build_s", "exec_s", "compiles", "jobs", "stages", "tasks",
+        "input_records", "shuffle_write_bytes", "spill_bytes", "plan_s",
+        "plan",
+    ]
+    for k in ("build_s", "exec_s", "plan_s"):
+        assert isinstance(rec[k], float) and rec[k] >= 0, k
+    for k in ("compiles", "jobs", "stages", "tasks", "input_records",
+              "shuffle_write_bytes", "spill_bytes"):
+        assert isinstance(rec[k], int) and rec[k] >= 0, k
+    assert list(rec["plan"]) == list(bench.PLAN_NODES)
+    assert all(isinstance(v, int) for v in rec["plan"].values())
+    assert rec["jobs"] >= 1
+    assert rec["stages"] >= 1
+    assert rec["plan"]["exchange"] >= 1
+    assert queries._LIVE_CACHES == []
+    json.dumps(rec)  # goes into BENCH_DETAIL.json as is
 
 
 def test_line_degrades_gracefully_on_overflow():

@@ -374,24 +374,20 @@ def test_dedup_clusters_reliable_checkpoint_matches_local(
 ):
     """The fault-tolerant checkpoint() path (cluster deployments: survives
     executor loss mid-iteration) must produce bit-identical labels to the
-    default localCheckpoint() path. Both are rounds of the distributed
-    branch, so the fixture graph is forced onto it."""
+    default localCheckpoint() path. The session's checkpoint dir selects
+    the path. Both are rounds of the distributed branch, so the fixture
+    graph is forced onto it."""
     from smartbulkcopy_spark.pipeline import dedup
     from smartbulkcopy_spark.pipeline.dedup import dedup_clusters
 
     monkeypatch.setattr(dedup, "LOCAL_CC_MAX_EDGES", 0)
 
-    local = dedup_clusters(spark, sf_dir, reliable=False).collect()
+    assert spark.sparkContext.getCheckpointDir() is None
+    local = dedup_clusters(spark, sf_dir).collect()
     assert local, "fixture must yield clusters"
     spark.sparkContext.setCheckpointDir(str(tmp_path / "ckpt"))
     try:
-        assert (
-            dedup_clusters(spark, sf_dir, reliable=True).collect() == local
-        )
-        # auto mode detects the configured dir, takes the reliable path
-        assert (
-            dedup_clusters(spark, sf_dir, reliable=None).collect() == local
-        )
+        assert dedup_clusters(spark, sf_dir).collect() == local
         # the reliable path really ran (it creates the checkpoint base),
         # and every run directory is removed before the call returns
         # (the final labels hop off via localCheckpoint): a long-lived
@@ -401,7 +397,7 @@ def test_dedup_clusters_reliable_checkpoint_matches_local(
         assert not runs, f"reliable run dirs leaked: {runs}"
     finally:
         # UNSET the session checkpoint dir (no public API): leaving it
-        # configured silently flips every later reliable=None CC call in
+        # configured silently flips every later CC call in
         # the shared session onto the checkpoint() path writing into this
         # test's tmp_path — the same shared-session-pollution class as
         # the q27 cache note in CLAUDE.md.
@@ -440,7 +436,7 @@ def test_dedup_pair_injection_single_materialization(spark, sf_dir):
             sorted(r["doc_id"] for r in cur.select("doc_id").collect())
             == base_curated
         )
-        labels = dedup_clusters(spark, sf_dir, pairs=pairs, reliable=False)
+        labels = dedup_clusters(spark, sf_dir, pairs=pairs)
         got = labels.collect()
         assert got == base_labels
         keep = cluster_keep_docs(
@@ -556,22 +552,24 @@ def test_cc_doubling_fallback_converges_past_budget(
     )
 
     monkeypatch.setattr(dedup, "LOCAL_CC_MAX_EDGES", 0)
+    base = dedup_clusters(spark, sf_dir).collect()
 
     # 0-1-2-...-120: diameter 120 >> budget 3. Hash-min alone would need
     # 120 rounds; budget 3 forces the doubling phase almost immediately.
+    monkeypatch.setattr(dedup, "MAX_CC_ROUNDS", 3)
     n = 121
     path = spark.createDataFrame(
         [(i, i + 1) for i in range(n - 1)], ["a_id", "b_id"]
     )
-    labels = connected_components(spark, path, reliable=False, budget=3)
+    labels = connected_components(spark, path)
     got = {r["node"]: r["lbl"] for r in labels.collect()}
     assert got == {i: 0 for i in range(n)}
 
     # Identical labels to pure hash-min on the q69 fixture graph (its
-    # diameter is tiny, so budget=0 exercises doubling on real data).
-    base = dedup_clusters(spark, sf_dir, reliable=False).collect()
+    # diameter is tiny, so budget 0 exercises doubling on real data).
+    monkeypatch.setattr(dedup, "MAX_CC_ROUNDS", 0)
     pairs = verified_pairs(spark, sf_dir)
-    doubled = connected_components(spark, pairs, reliable=False, budget=0)
+    doubled = connected_components(spark, pairs)
     via_fallback = sorted(
         (r["node"], r["lbl"]) for r in doubled.collect()
     )

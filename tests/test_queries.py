@@ -95,24 +95,23 @@ def test_json_int_is_integer_strict(spark):
 def test_round_closeout_discipline():
     """The recurring late-registration gap (rounds 5-7): a new
     registration is only DONE when it carries a QUEUED_SINCE seniority
-    entry AND appears in the plan/scale tooling. Pin it: every
-    registered query must be ledger-known (QUEUED_SINCE or LAST_GREEN),
-    and every registration from round 7 on (batch >= 70) must have a
-    dump_plans annotation and a scale_probe entry."""
+    entry, says what it does and shows up in the scale tooling and the
+    committed bench record. Pin it: every registered query must be
+    ledger-known (QUEUED_SINCE or LAST_GREEN), and every registration
+    from round 7 on (batch >= 70) must have a non-empty `doc` and a
+    scale_probe entry."""
     import importlib.util
+    import json
     from pathlib import Path
 
     from smartbulkcopy_spark.queries import LAST_GREEN, QUEUED_SINCE
 
-    def load(name):
-        p = Path(__file__).parents[1] / "tools" / f"{name}.py"
-        spec = importlib.util.spec_from_file_location(name, p)
-        mod = importlib.util.module_from_spec(spec)
-        spec.loader.exec_module(mod)
-        return mod
-
-    ANNOTATED = load("dump_plans").ANNOTATED
-    OPS = load("scale_probe").PROBES
+    repo = Path(__file__).parents[1]
+    p = repo / "tools" / "scale_probe.py"
+    spec = importlib.util.spec_from_file_location("scale_probe", p)
+    mod = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(mod)
+    OPS = mod.PROBES
 
     unknown = [
         n
@@ -123,16 +122,16 @@ def test_round_closeout_discipline():
     assert set(QUEUED_SINCE) <= set(REGISTRY)
 
     recent = [n for n, b in QUEUED_SINCE.items() if b >= 70]
-    missing_plan = [n for n in recent if n not in ANNOTATED]
+    missing_doc = [n for n in recent if not REGISTRY[n].doc.strip()]
     missing_scale = [n for n in recent if n not in OPS]
-    assert not missing_plan, f"no dump_plans annotation: {missing_plan}"
+    assert not missing_doc, f"registrations without a doc: {missing_doc}"
     assert not missing_scale, f"no scale_probe entry: {missing_scale}"
 
-    # File-backed artifact check (round-8 verdict item 8): the ANNOTATED
-    # list only proves intent; the committed PLANS.md must actually carry
-    # a section per registration from batch 96 on.
-    plans = (Path(__file__).parents[1] / "PLANS.md").read_text()
+    # File-backed artifact check (round-8 verdict item 8): the committed
+    # BENCH_DETAIL.json must carry a bench.py record for every
+    # registration from batch 96 on, i.e. the sweep has run since.
+    profile = json.loads((repo / "BENCH_DETAIL.json").read_text())["profile"]
     newest = [n for n, b in QUEUED_SINCE.items() if b >= 96]
-    missing_section = [n for n in newest if f"## {n}" not in plans]
-    assert not missing_section, f"no PLANS.md section: {missing_section}"
+    missing_record = [n for n in newest if n not in profile]
+    assert not missing_record, f"no BENCH_DETAIL.json profile: {missing_record}"
 

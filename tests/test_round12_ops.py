@@ -150,9 +150,10 @@ def test_cc_shuffle_partitions_restored_on_error(spark, monkeypatch):
 def test_round12_registrations_complete():
     """Every round-12 registration (batch >= 120) carries the full
     close-out kit: a REGISTRY entry with an oracle, a QUEUED_SINCE
-    batch, and (enforced globally by test_round_closeout_discipline)
-    dump_plans/scale_probe entries. Pin the exact name set so a
-    silently-dropped registration cannot pass."""
+    batch, and (enforced globally by test_round_closeout_discipline) a
+    non-empty doc, a scale_probe entry and a BENCH_DETAIL.json record.
+    Pin the exact name set so a silently-dropped registration cannot
+    pass."""
     from smartbulkcopy_spark.queries import QUEUED_SINCE, REGISTRY
 
     new = sorted(n for n, b in QUEUED_SINCE.items() if 120 <= b < 130)
