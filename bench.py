@@ -33,30 +33,6 @@ def run_one(df) -> None:
     df.write.format("noop").mode("overwrite").save()
 
 
-def _inflate_lineitem(src: str, dest_dir: str, factor: int) -> None:
-    """Concatenate `factor` key-shifted copies of lineitem into ONE parquet
-    file (ParquetCatalog reads file-level metadata, so no Spark directory
-    write). One copy is resident at a time; row-group streaming keeps the
-    writer memory bounded."""
-    import pyarrow.compute as pc
-    import pyarrow.parquet as pq
-
-    t = pq.read_table(src)
-    shift = pc.max(t["l_orderkey"]).as_py() + 1
-    idx = t.schema.get_field_index("l_orderkey")
-    with pq.ParquetWriter(
-        os.path.join(dest_dir, "lineitem.parquet"), t.schema
-    ) as writer:
-        for k in range(factor):
-            writer.write_table(
-                t.set_column(
-                    idx,
-                    "l_orderkey",
-                    pc.add(t["l_orderkey"], k * shift),
-                )
-            )
-
-
 def _plan_str(df) -> str:
     import contextlib
     import io
@@ -171,10 +147,12 @@ def copy_shape_checks(spark, sf_dir: str) -> dict[str, bool]:
         )
 
     return {
-        # heap: one hash exchange on the reference's modulo bucket (the
-        # parallel-heap-copy strategy), zero sorting -> N unsorted writers
+        # heap: one exchange routed on the reference's modulo bucket (the
+        # parallel-heap-copy strategy) into its 9 partitions, zero sorting
+        # -> N unsorted writers
         "heap_bucket_exchange_no_sort": (
-            "hashpartitioning(" in heap
+            re.search(r"\(abs\(l_orderkey#\d+L\) % 9\), 0\).*, 9\)", heap)
+            is not None
             and exchanges(heap) == 1
             and "Sort " not in heap
         ),
@@ -211,75 +189,73 @@ COPY_INFLATE = 8
 
 
 def copy_benchmarks(spark, sf_dir: str) -> dict[str, object]:
-    """Time `copy_table` of lineitem under the reference's benchmarked
-    layouts (BASELINE.md: heap 135s / heap-partitioned 111s / clustered
-    rowstore 505s / partitioned rowstore 207s at TPC-H sf10; the ordered
-    single stream is 4.5x the partitioned copy there), at sf0.1 and again
-    on an 8x key-shifted inflation where the sort/shuffle costs emerge
-    from the fixed per-job overhead. `shape` carries the mechanism
-    booleans + the documented local-inversion note (COPY_SHAPE_NOTE)."""
+    """Time the write of a `CopyExecutor` copy of lineitem under the
+    reference's benchmarked layouts (BASELINE.md: heap 135s /
+    heap-partitioned 111s / clustered rowstore 505s / partitioned rowstore
+    207s at TPC-H sf10; the ordered single stream is 4.5x the partitioned
+    copy there), at sf0.1 and again on an 8x key-shifted inflation where
+    the sort/shuffle costs emerge from the fixed per-job overhead. `shape`
+    carries the mechanism booleans + the documented local-inversion note
+    (COPY_SHAPE_NOTE)."""
     import shutil
     import tempfile
 
-    from smartbulkcopy_spark.catalog import ParquetCatalog
+    from perfbench.datagen import inflate
     from smartbulkcopy_spark.config import (
         EngineConfig,
         LogicalPartitioningStrategy,
     )
-    from smartbulkcopy_spark.planner import Outcome, analyze
-    from smartbulkcopy_spark.sources.parquet import copy_table
+    from smartbulkcopy_spark.executor import CopyExecutor
 
-    layouts = bench_layouts()
-    config = EngineConfig(
-        logical_partitioning_strategy=LogicalPartitioningStrategy.COUNT,
-        logical_partitions=9,
-        batch_size=1000,
-    )
     def run_layouts(
         root: str, suffix: str, out: dict[str, object], repeats: int = 1
     ) -> None:
-        for name, layout in layouts.items():
-            cat = ParquetCatalog(root, {"lineitem": layout})
-            src = cat.collect("lineitem")
-            import dataclasses
-
-            dst = dataclasses.replace(src)
-            plan = analyze(["lineitem"], [src], [dst], config)
-            assert plan.outcome is Outcome.SUCCESS, (name, plan.outcome)
+        for name, layout in bench_layouts().items():
             best = None
             for _ in range(repeats):
                 dest = tempfile.mkdtemp(prefix=f"sbc_bench_{name}_")
                 try:
-                    t0 = time.perf_counter()
-                    copy_table(spark, plan.tasks, dest, truncate=True)
-                    secs = time.perf_counter() - t0
-                    best = secs if best is None else min(best, secs)
-                    # Outside the timed region: every layout must have
-                    # written EXACTLY the source rows — the rows/s
-                    # numbers (incl. the ordered-8x win) are meaningless
-                    # if a layout under-writes. Metadata-only count.
-                    written = spark.read.parquet(dest).count()
-                    assert written == src.size.row_count, (
-                        name,
-                        written,
-                        src.size.row_count,
+                    config = EngineConfig(
+                        source=root,
+                        destination=dest,
+                        tables=["lineitem"],
+                        logical_partitioning_strategy=(
+                            LogicalPartitioningStrategy.COUNT
+                        ),
+                        logical_partitions=9,
+                        batch_size=1000,
                     )
+                    report = CopyExecutor(
+                        spark,
+                        config,
+                        layouts={"lineitem": layout},
+                        log=lambda *_: None,
+                    ).run()
                 finally:
                     shutil.rmtree(dest, ignore_errors=True)
+                # the rows/s numbers (incl. the ordered-8x win) are
+                # meaningless unless the layout wrote exactly the source
+                # rows; the verify runs outside the timed write
+                assert (
+                    report.exit_code == 0 and report.results[0].content_match
+                ), (name, report.messages)
+                res = report.results[0]
+                best = res.write_s if best is None else min(best, res.write_s)
             out[f"{name}{suffix}"] = round(best, 4)
             # BASELINE.md's heap copy moves ~444k rows/s; surface the
             # directly comparable number.
-            out[f"{name}{suffix}_rows_per_sec"] = round(
-                src.size.row_count / best
-            )
+            out[f"{name}{suffix}_rows_per_sec"] = round(res.source_rows / best)
 
     out: dict[str, object] = {}
     run_layouts(sf_dir, "", out)
 
     big = tempfile.mkdtemp(prefix="sbc_bench_8x_")
     try:
-        _inflate_lineitem(
-            os.path.join(sf_dir, "lineitem.parquet"), big, COPY_INFLATE
+        inflate(
+            os.path.join(sf_dir, "lineitem.parquet"),
+            os.path.join(big, "lineitem.parquet"),
+            COPY_INFLATE,
+            list(range(COPY_INFLATE)),
         )
         # warm the inflated file's listing + footer so first-touch cost
         # isn't charged to whichever layout runs first; best-of-2 squeezes
@@ -298,7 +274,8 @@ def copy_benchmarks(spark, sf_dir: str) -> dict[str, object]:
     shape["partitioned_beats_heap_8x"] = (
         out["heap_partitioned_8x"] <= out["heap_8x"]
     )
-    # set by the per-layout asserts above (an under-writing layout raises)
+    # set by the per-layout content_match asserts above (a layout whose
+    # destination differs from its source raises)
     shape["rows_verified"] = True
     shape["note"] = COPY_SHAPE_NOTE
     out["shape"] = shape

@@ -51,14 +51,12 @@ class EngineConfig:
         LogicalPartitioningStrategy.AUTO
     )
     logical_partitions: int = 1
-    command_timeout: int = 90 * 60
     sync_identity: bool = False
     truncate_tables: bool = False
     safe_check: SafeCheck = SafeCheck.READ_ONLY
     stop_if: StopIf = StopIf.SECONDARY_INDEX | StopIf.TEMPORAL_TABLE
     retry_max_attempt: int = 5
     retry_delay_increment: int = 10
-    use_compatibility_mode: bool = False  # no-op on Spark; kept for parity
 
     def __post_init__(self) -> None:
         self.validate()
@@ -109,6 +107,8 @@ def load_config(path: str | Path) -> EngineConfig:
     sync-identity,safe-check,stop-if.{secondary-indexes,temporal-table},
     command-timeout,retry-connection.{max-attempt,delay-increment},
     compatibility-mode}, tables | tables.include/tables.exclude.
+    ``command-timeout`` and ``compatibility-mode`` are accepted and ignored:
+    nothing on Spark has a per-command timeout or a compatibility mode.
     """
     data = json.loads(Path(path).read_text())
     opts = data.get("options", {})
@@ -153,12 +153,10 @@ def load_config(path: str | Path) -> EngineConfig:
         max_parallel_tasks=int(opts.get("tasks", 7)),
         logical_partitioning_strategy=strategy,
         logical_partitions=lp,
-        command_timeout=int(opts.get("command-timeout", 90 * 60)),
         sync_identity=bool(opts.get("sync-identity", False)),
         truncate_tables=bool(opts.get("truncate-tables", False)),
         safe_check=safe_map[safe_raw],
         stop_if=stop_if,
         retry_max_attempt=int(retry.get("max-attempt", 5)),
         retry_delay_increment=int(retry.get("delay-increment", 10)),
-        use_compatibility_mode=bool(opts.get("compatibility-mode", False)),
     )

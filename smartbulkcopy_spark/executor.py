@@ -61,6 +61,9 @@ class TableResult:
     destination_rows: int = -1
     content_match: bool = False
     seconds: float = 0.0
+    # the write (with its retries) and the verify alone, inside ``seconds``
+    write_s: float = 0.0
+    verify_s: float = 0.0
     identity_reseed_sql: str | None = None
     pre_sql: list[str] = field(default_factory=list)
     post_sql: list[str] = field(default_factory=list)
@@ -269,18 +272,20 @@ class CopyExecutor:
             res.pre_sql, res.post_sql = hooks.pre, hooks.post
             for sql in hooks.pre:
                 self.log(f"pre-copy DDL hook: {sql}")
+            t_write = time.perf_counter()
             with_retry(
-                lambda: copy_table(
-                    self.spark, tasks, dest, truncate=True
-                ),
+                lambda: copy_table(self.spark, tasks, dest),
                 self.config,
                 log=self.log,
             )
+            t_verify = time.perf_counter()
+            res.write_s = t_verify - t_write
             check = check_copy(
                 self.spark.read.parquet(tasks[0].source.location),
                 self.spark.read.parquet(dest),
                 table,
             )
+            res.verify_s = time.perf_counter() - t_verify
             res.source_rows = check.source_rows
             res.destination_rows = check.destination_rows
             res.content_match = check.content_match

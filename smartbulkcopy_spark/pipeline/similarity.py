@@ -2067,9 +2067,9 @@ def _tree_walk_expr(levels):
 
 
 def tree_assignment(spark, sf_dir, k=TREE_LEAVES, branch=TREE_BRANCH):
-    """(code, n_vecs, err_e6) per assigned leaf — the parameterized
-    builder tools/deep_probe.py scales (k grows with the corpus, depth
-    with log k) while q183 registers the fixture configuration."""
+    """(code, n_vecs, err_e6) per assigned leaf — a builder parameterized
+    by k so a probe can scale it (k grows with the corpus, depth with
+    log k) while q183 registers the fixture configuration."""
     rows = (
         table(spark, sf_dir, "embeddings")
         .orderBy("vec_id")

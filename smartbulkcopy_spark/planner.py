@@ -9,8 +9,8 @@ asserts plan shape (partition counts, order hints, outcomes).
 Spark mapping of the plan nodes:
 - a ``LogicalPartitionCopyTask`` family = ``spark.read.jdbc(predicates=[...])``
   (one Spark task per predicate) or, for file sources, a single scan whose
-  bucket expression drives ``repartition`` — Spark's scheduler replaces the
-  reference's hand-rolled ConcurrentQueue of workers.
+  bucket expression drives ``repartitionById`` — Spark's scheduler
+  replaces the reference's hand-rolled ConcurrentQueue of workers.
 - a ``PhysicalPartitionCopyTask`` = one partition-pruned read (range
   predicate per partition boundary; ``$partition.fn(col) = n`` is the
   SQL-Server-specific spelling, reference: client/CopyInfo.cs:54).
@@ -105,10 +105,10 @@ class LogicalPartitionCopyTask(CopyTask):
 
     def bucket_sql_expr(self) -> str | None:
         """THE canonical bucketing expression. Every spelling — the JDBC
-        predicate, the Catalyst repartition expression, the per-bucket
-        retry filter — derives from this one string, so a row lands in the
-        same bucket no matter which path evaluates it (round-1 advice: the
-        two paths disagreed). NULL or non-castable keys deterministically
+        predicate and the Catalyst routing expression of a file copy —
+        derives from this one string, so a row lands in the same bucket
+        no matter which path evaluates it (the two paths once
+        disagreed). NULL or non-castable keys deterministically
         land in bucket 0 (the reference's %%PhysLoc%% can never be NULL;
         a key column can)."""
         if self.n_partitions <= 1 or not self.bucket_column:

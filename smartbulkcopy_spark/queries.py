@@ -646,43 +646,34 @@ def q20(spark, sf_dir):
     import shutil
     import tempfile
 
-    from smartbulkcopy_spark.catalog import ParquetCatalog
     from smartbulkcopy_spark.config import EngineConfig, LogicalPartitioningStrategy
-    from smartbulkcopy_spark.planner import Outcome, analyze
-    from smartbulkcopy_spark.sources.parquet import copy_table
-    from smartbulkcopy_spark.verify import check_copy
-
-    src_info = ParquetCatalog(sf_dir).collect("lineitem")
-    # Destination "exists" as an empty heap (the reference requires
-    # pre-created destination objects, docs/FAQ.md:10-16).
-    import dataclasses
-
-    # The planner pairs source/destination by table name; the destination
-    # "exists" as an empty heap with identical layout.
-    dst_info = dataclasses.replace(src_info)
-    config = EngineConfig(
-        logical_partitioning_strategy=LogicalPartitioningStrategy.COUNT,
-        logical_partitions=9,
-        # Below the reference's size gate every fixture would fall back to
-        # a single stream; 1k keeps the 9-way family at every test SF.
-        batch_size=1000,
+    from smartbulkcopy_spark.executor import (
+        EXIT_MISMATCH,
+        EXIT_OK,
+        CopyExecutor,
     )
-    plan = analyze(["lineitem"], [src_info], [dst_info], config)
-    assert plan.outcome is Outcome.SUCCESS, plan.outcome
 
     dest = tempfile.mkdtemp(prefix="sbc_q20_")
     try:
-        copy_table(spark, plan.tasks, dest, truncate=True)
-        check = check_copy(
-            spark.read.parquet(src_info.location),
-            spark.read.parquet(dest),
-            "lineitem",
+        config = EngineConfig(
+            source=sf_dir,
+            destination=dest,
+            tables=["lineitem"],
+            logical_partitioning_strategy=LogicalPartitioningStrategy.COUNT,
+            logical_partitions=9,
+            # Below the reference's size gate every fixture would fall back
+            # to a single stream; 1k keeps the 9-way family at every test SF.
+            batch_size=1000,
         )
+        report = CopyExecutor(spark, config, log=lambda *_: None).run()
     finally:
         shutil.rmtree(dest, ignore_errors=True)
-
+    # a content mismatch is q20's answer; anything else is a failed run
+    if report.exit_code not in (EXIT_OK, EXIT_MISMATCH) or not report.results:
+        raise RuntimeError(f"q20 copy failed: {report.messages}")
+    [res] = report.results
     return spark.createDataFrame(
-        [(check.source_rows, check.destination_rows, check.content_match)],
+        [(res.source_rows, res.destination_rows, res.content_match)],
         "src_rows bigint, dst_rows bigint, content_match boolean",
     )
 

@@ -7,9 +7,14 @@ the work queue — and the plan node family only decides the partitioning
 expression and write-side sort:
 
 - FullCopyTask            -> read -> (orderBy if hinted) -> write
-- LogicalPartitionCopyTask-> read -> repartition(N, bucket) -> write
+- LogicalPartitionCopyTask-> read -> repartitionById(N, bucket) -> write
+                              (bucket b is output partition b: one writer
+                              per bucket)
 - PhysicalPartitionCopyTask-> read -> repartitionByRange(N, part_col)
                               -> sortWithinPartitions (hint) -> write
+                              (sampled bounds, not the tasks' declared
+                              ones: declared bounds that miss the data's
+                              range pile its rows onto one writer)
 
 Each output partition is written independently and the parquet commit
 protocol (_temporary + job commit) makes the copy idempotent under task
@@ -48,8 +53,11 @@ def read_for_tasks(spark: SparkSession, tasks: list[CopyTask]) -> DataFrame:
         # Same canonical bucket expression as the JDBC predicate string
         # (planner.bucket_sql_expr) so a bucket re-copied/verified on either
         # path selects exactly the same rows (reference contract:
-        # client/CopyInfo.cs:61-67).
-        df = df.repartition(head.n_partitions, F.expr(head.bucket_sql_expr()))
+        # client/CopyInfo.cs:61-67). The bucket id IS the partition id:
+        # hash-partitioning 9 bucket ids fills only 4 of 9 partitions.
+        df = df.repartitionById(
+            head.n_partitions, F.expr(f"CAST({head.bucket_sql_expr()} AS INT)")
+        )
     elif isinstance(head, PhysicalPartitionCopyTask):
         n = max(len(tasks), 1)
         df = df.repartitionByRange(n, F.col(head.partition_column))
@@ -64,22 +72,10 @@ def read_for_tasks(spark: SparkSession, tasks: list[CopyTask]) -> DataFrame:
     return df
 
 
-def bucket_filter(task: LogicalPartitionCopyTask):
-    """Per-bucket Catalyst predicate — literally the JDBC predicate string
-    parsed by Catalyst, used when a single bucket must be re-copied
-    (retry/backfill) without touching the others. One expression, two
-    spellings, zero drift."""
-    return F.expr(task.predicate_sql())
-
-
-def write_table(df: DataFrame, dest_path: str, truncate: bool) -> None:
-    df.write.mode("overwrite" if truncate else "append").parquet(dest_path)
-
-
 def copy_table(
-    spark: SparkSession,
-    tasks: list[CopyTask],
-    dest_path: str,
-    truncate: bool = True,
+    spark: SparkSession, tasks: list[CopyTask], dest_path: str
 ) -> None:
-    write_table(read_for_tasks(spark, tasks), dest_path, truncate)
+    """Write one table's task family to ``dest_path``, replacing whatever
+    is there: a retried attempt starts from nothing, so it cannot
+    duplicate rows."""
+    read_for_tasks(spark, tasks).write.mode("overwrite").parquet(dest_path)

@@ -70,6 +70,8 @@ def test_load_full_config(tmp_path):
                 "truncate-tables": True,
                 "sync-identity": True,
                 "safe-check": "snapshot",
+                # reference configs carry these two; they must load,
+                # though nothing on Spark reads them
                 "command-timeout": 120,
                 "compatibility-mode": True,
                 "retry-connection": {"max-attempt": 3, "delay-increment": 5},
@@ -84,9 +86,8 @@ def test_load_full_config(tmp_path):
     assert cfg.batch_size == 50000
     assert cfg.logical_partitioning_strategy is LogicalPartitioningStrategy.SIZE
     assert cfg.logical_partitions == 4
-    assert cfg.truncate_tables and cfg.sync_identity and cfg.use_compatibility_mode
+    assert cfg.truncate_tables and cfg.sync_identity
     assert cfg.safe_check is SafeCheck.SNAPSHOT
-    assert cfg.command_timeout == 120
     assert cfg.retry_max_attempt == 3 and cfg.retry_delay_increment == 5
     assert cfg.stop_if == StopIf.NONE
 

@@ -19,7 +19,7 @@ from smartbulkcopy_spark.planner import (
     analyze,
 )
 from smartbulkcopy_spark.sources.jdbc import jdbc_predicates
-from smartbulkcopy_spark.sources.parquet import bucket_filter
+from smartbulkcopy_spark.sources.parquet import copy_table, read_for_tasks
 from smartbulkcopy_spark.verify import content_fingerprint
 
 
@@ -38,22 +38,67 @@ def _nine_way(sf_dir):
     return plan.tasks
 
 
-def test_buckets_disjoint_exhaustive_both_spellings(spark, sf_dir):
-    """Every row lands in exactly one bucket whether the predicate is the
-    JDBC SQL string (parsed by Catalyst here) or the Catalyst filter —
-    they are the same expression by construction."""
-    tasks = _nine_way(sf_dir)
-    li = spark.read.parquet(tasks[0].source.location)
-    total = li.count()
+def _with_null_keys(spark, tasks, tmp_path):
+    """The 9-way family re-pointed at a lineitem copy whose bucket key is
+    NULL on every 7th row."""
     from pyspark.sql import functions as F
 
+    key = tasks[0].bucket_column
+    path = str(tmp_path / "li_nulls")
+    li = spark.read.parquet(tasks[0].source.location)
+    li.withColumn(
+        key, F.when(F.col(key) % 7 != 0, F.col(key))
+    ).write.parquet(path)
+    src = dataclasses.replace(tasks[0].source, location=path)
+    return [dataclasses.replace(t, source=src) for t in tasks]
+
+
+def test_buckets_disjoint_exhaustive_both_spellings(spark, sf_dir, tmp_path):
+    """Every row, NULL keys included, satisfies exactly one task predicate
+    (the JDBC SQL string, parsed by Catalyst here), and the file copy
+    routes it to the Spark partition of that bucket — the two spellings
+    are the same expression by construction."""
+    from pyspark.sql import functions as F
+
+    tasks = _with_null_keys(spark, _nine_way(sf_dir), tmp_path)
+    li = spark.read.parquet(tasks[0].source.location)
+    assert li.filter(F.col(tasks[0].bucket_column).isNull()).count() > 0
     per_bucket_sql = [
         li.filter(F.expr(t.predicate_sql())).count() for t in tasks
     ]
-    per_bucket_catalyst = [li.filter(bucket_filter(t)).count() for t in tasks]
-    assert per_bucket_sql == per_bucket_catalyst
-    assert sum(per_bucket_sql) == total
+    assert sum(per_bucket_sql) == li.count()
     assert all(c > 0 for c in per_bucket_sql)  # no empty bucket at 6k rows
+
+    preds = [F.expr(t.predicate_sql()) for t in tasks]
+    routed = read_for_tasks(spark, tasks).select(
+        F.spark_partition_id().alias("pid"),
+        sum(p.cast("int") for p in preds).alias("n_matched"),
+        F.coalesce(*(F.when(p, i) for i, p in enumerate(preds))).alias("b"),
+    )
+    assert routed.count() == li.count()
+    assert routed.filter("n_matched != 1 OR b != pid").count() == 0
+
+
+def test_nine_way_copy_writes_one_file_per_bucket(spark, sf_dir, tmp_path):
+    """Each logical bucket gets its own writer: 9 non-empty part files,
+    each holding exactly one bucket (hash-partitioning the 9 bucket ids
+    fills only 4 partitions)."""
+    from pyspark.sql import functions as F
+
+    tasks = _nine_way(sf_dir)
+    dest = str(tmp_path / "li_9")
+    copy_table(spark, tasks, dest)
+    per_file = (
+        spark.read.parquet(dest)
+        .groupBy(F.input_file_name().alias("f"))
+        .agg(
+            F.countDistinct(F.expr(tasks[0].bucket_sql_expr())).alias("b"),
+            F.count("*").alias("n"),
+        )
+        .collect()
+    )
+    assert len(per_file) == 9
+    assert all(r["b"] == 1 and r["n"] > 0 for r in per_file)
 
 
 def test_null_bucket_keys_route_to_bucket_zero(spark):
@@ -168,7 +213,6 @@ def test_partition_key_only_ordered_write_path(spark, sf_dir, tmp_path):
 
     from smartbulkcopy_spark.catalog import LayoutSpec, ParquetCatalog
     from smartbulkcopy_spark.planner import OrderHint, analyze
-    from smartbulkcopy_spark.sources.parquet import copy_table
     from smartbulkcopy_spark.verify import check_copy
 
     layout = LayoutSpec(
@@ -188,7 +232,7 @@ def test_partition_key_only_ordered_write_path(spark, sf_dir, tmp_path):
     assert all(t.order_hint is OrderHint.PARTITION_KEY_ONLY for t in plan.tasks)
 
     dest = str(tmp_path / "li_part")
-    copy_table(spark, plan.tasks, dest, truncate=True)
+    copy_table(spark, plan.tasks, dest)
     check = check_copy(
         spark.read.parquet(src.location), spark.read.parquet(dest), "lineitem"
     )

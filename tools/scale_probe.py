@@ -341,7 +341,7 @@ def _existing_rows() -> dict:
 
 def _manual_tail() -> str:
     """Everything from the first manual `## ` section on (appended by
-    dedicated probes like tools/winnow_tail_probe.py) — preserved
+    dedicated probes) — preserved
     verbatim across rewrites."""
     path = REPO / "SCALE.md"
     if not path.exists():
